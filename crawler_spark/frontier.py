@@ -21,13 +21,18 @@ Per round (each step one declarative DataFrame op, shuffles noted):
  10. atomic round commit (state.json) — kill anywhere before it and resume
      replays the round; after it, the round is durable.
 
-Job economy (this is what the two-parallelism bench measures): one round
-is exactly 2 aggregate jobs (bucket-prune collect — which also fills the
-probed cache and fires the candidate Observation — and the per-host
-stats/skew job, which fills the tagged cache) + the table writes. Every
-other metric piggybacks on a write via ``DataFrame.observe`` — no
-standalone count() jobs, because at a 10^10-row frontier each count is a
-full extra pass over the round's data.
+Job economy: one aggregate job (the bucket-prune collect, which also
+fills the probed cache and fires the candidate Observation) + the five
+table writes + the jobs those trigger: every broadcast exchange (robots,
+admitted, fetched urls, filter blobs) is built by a job of its own.
+Measured on the benchmark's ``crawl_recrawl`` (cuckoo, 20k pages), a
+round runs 17 jobs, or 20 when a filter bucket overflows and is rebuilt
+(traced: 18.5 jobs and 27.5 stages per round). Every metric piggybacks
+on a write via ``DataFrame.observe`` — no standalone count() jobs,
+because at a 10^10-row frontier each count is a full extra pass over the
+round's data — and no job is metadata: table reads reuse the schemas the
+store wrote, and run()'s drain check reuses the last frontier write's
+observation.
 
 Scheduling-order contract (SURVEY §3 EP1 caveat): the reference's emitted
 order is thread-nondeterministic; the *scheduled* order is deterministic.
@@ -44,6 +49,7 @@ permanently-failed URL stops being scheduled.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -261,6 +267,10 @@ class FrontierCrawler:
         # grows so per-bucket bloom blobs stay ≤ cfg.bloom_max_blob_bytes.
         self._num_buckets = cfg.num_host_buckets
         self._seen_total = 0
+        # (frontier version, its row count) as last observed by this
+        # object's own writes: run()'s drain check needs no job while the
+        # table's current version is still that one
+        self._frontier_rows: tuple[int, int] | None = None
         # Fetch side: a column-pruned view of the corpus, scanned per round
         # with the (politeness-bounded) admitted set broadcast as the probe.
         # The previous design pre-deduped ALL pages with a global window —
@@ -302,6 +312,36 @@ class FrontierCrawler:
 
     def _filter_version(self) -> int:
         return BLOOM_HASH_VERSION if self.seen_mode == "bloom" else CUCKOO_HASH_VERSION
+
+    def _observe_filter(
+        self, filters: DataFrame, round_no: int
+    ) -> tuple[DataFrame, Observation, Callable[[], dict]]:
+        """Piggyback the filter set's size hint (the next round's
+        broadcast-vs-cogroup probe gate: total Bloom bits, or total cuckoo
+        slot bytes) and its overflowing-bucket count on the write of
+        ``filters``. Returns the observed frame, the Observation and a
+        meta callable for ``store.write``: the hint is stored only when
+        no bucket overflowed (an overflowed version is superseded by the
+        rebuild)."""
+        if self.seen_mode == "cuckoo":
+            blob, key = "slots", "total_slot_bytes"
+            size = F.sum(F.coalesce(F.size("slots"), F.lit(0))) * 4
+        else:
+            blob, key, size = "bits", "total_bits", F.sum("m")
+        obs = Observation()
+        observed = filters.observe(
+            obs,
+            size.alias("size"),
+            F.sum(F.when(F.col(blob).isNull(), 1).otherwise(0)).alias("overflow"),
+        )
+
+        def meta() -> dict:
+            vals = obs.get
+            if int(vals["overflow"] or 0):
+                return self._bloom_meta(round_no)
+            return {**self._bloom_meta(round_no), key: int(vals["size"] or 0)}
+
+        return observed, obs, meta
 
     def _build_filters(self, seen: DataFrame, headroom: int = 1) -> DataFrame:
         """Per-bucket filter blobs from the exact seen table, in the
@@ -366,11 +406,12 @@ class FrontierCrawler:
         """Round-0 frontier from the seed list. Priority encodes the
         reference's deterministic submission order (stream order,
         src/crawler.py:103-106): earlier seed ⇒ higher priority."""
+        obs = Observation()
         frontier = self._canonical_frontier(
             seeds, F.lit(0), -F.col("seed_id").cast("double")
-        )
+        ).observe(obs, F.count(F.lit(1)).alias("n"))
         empty_seen = self.spark.createDataFrame([], SEEN_SCHEMA)
-        self.store.write("frontier", frontier, meta={"round": 0})
+        fv = self.store.write("frontier", frontier, meta={"round": 0})
         self.store.write("url_seen", empty_seen, meta={"round": 0})
         self.store.write(
             self._ftable, self._build_filters(empty_seen), meta=self._bloom_meta(0)
@@ -387,6 +428,7 @@ class FrontierCrawler:
                 },
             }
         )
+        self._frontier_rows = (fv, int(obs.get["n"] or 0))
 
     def resume(self) -> int:
         """Roll back to the last durable round; returns its number."""
@@ -486,7 +528,9 @@ class FrontierCrawler:
         if n == 0:
             present.unpersist()
             return 0
-        remaining = seen.join(F.broadcast(keys), "surt", "left_anti")
+        # anti-join the cached present keys, not ``keys``: same rows (only
+        # present keys can match), without a second canonicalize pass
+        remaining = seen.join(F.broadcast(present.select("surt")), "surt", "left_anti")
         rnd = int(state["round"])
         store.write(
             "url_seen",
@@ -503,27 +547,10 @@ class FrontierCrawler:
                 headroom=4,
             )
             new_f = filters.where(~F.col("bucket").isin(buckets)).unionByName(rebuilt)
-        obs = Observation()
-        if self.seen_mode == "bloom":
-            new_f = new_f.observe(obs, F.sum("m").alias("bits"))
-        else:
-            # keep the broadcast-vs-cogroup probe gate's byte total fresh
-            # across retraction versions too (same piggyback as the
-            # round-loop write)
-            new_f = new_f.observe(
-                obs, F.sum(F.coalesce(F.size("slots"), F.lit(0))).alias("ints")
-            )
-        fv = store.write(self._ftable, new_f, meta=self._bloom_meta(rnd))
-        if self.seen_mode == "bloom":
-            store.amend_meta(
-                self._ftable, {"total_bits": int(obs.get["bits"] or 0)}, version=fv
-            )
-        else:
-            store.amend_meta(
-                self._ftable,
-                {"total_slot_bytes": int(obs.get["ints"] or 0) * 4},
-                version=fv,
-            )
+        # keep the probe gate's size hint fresh across retraction versions
+        # too (same piggyback as the round-loop write)
+        new_f, _, fmeta = self._observe_filter(new_f, rnd)
+        store.write(self._ftable, new_f, meta=fmeta)
         present.unpersist()
         # a fresh (un-resumed) crawler object tracks 0 — trust the state
         self._seen_total = max(
@@ -760,10 +787,10 @@ class FrontierCrawler:
         #    Rows keep their bucket and are written bucket-sorted so the
         #    confirm join's IN-list prunes parquet row groups (the Iceberg
         #    bucket-partition analog).
+        seen_delta = admitted.join(retryable.select("surt"), "surt", "left_anti")
         obs_seen = Observation()
         newly_seen = (
-            admitted.join(retryable.select("surt"), "surt", "left_anti")
-            .select("bucket", "surt", "url", "host")
+            seen_delta.select("bucket", "surt", "url", "host")
             .withColumn("round", F.lit(round_no))
             .observe(obs_seen, F.count(F.lit(1)).alias("n"))
             .sortWithinPartitions("bucket")
@@ -784,109 +811,49 @@ class FrontierCrawler:
         # independent → run concurrently (separate action threads against
         # the same session); rollback-on-crash makes any interleaving safe
         # because state.json still commits last.
-        store.write("frontier", next_frontier, meta={"round": round_no})
+        fv = store.write("frontier", next_frontier, meta={"round": round_no})
         _tr("w_frontier")
 
-        def _w_seen_and_blooms() -> None:
-            seen_version = store.write(
-                "url_seen", newly_seen, meta={"round": round_no}, append=True
+        def _w_seen_and_filters() -> None:
+            store.write("url_seen", newly_seen, meta={"round": round_no}, append=True)
+            # filter maintenance folds in ONLY this round's delta, computed
+            # from the cached admitted/fetched frames (no read-back of the
+            # delta just written). Overflow detection and the size hint
+            # ride the write's Observation — the common path is ONE job.
+            # Buckets past their target FP rate / load factor are rebuilt
+            # from the exact table (amortized-rare: fresh buckets carry 4×
+            # headroom). It runs after the url_seen write rather than
+            # beside it: on the crawl_recrawl benchmark, the concurrent
+            # filter job gained about 5% throughput but raised the rounds
+            # and retractions whose process-tree RSS peaked past 3.7 GB
+            # from 3 to 10 in 24.
+            update = update_cuckoo if self.seen_mode == "cuckoo" else update_blooms
+            new_f, obs_f, fmeta = self._observe_filter(
+                update(filters, seen_delta, cfg=rcfg), round_no
             )
-            # filter maintenance: fold in ONLY this round's delta; overflow
-            # detection and the next round's broadcast-size hint both ride
-            # the write's Observation — the common path is ONE job, no
-            # standalone collect. Buckets that would overflow their target
-            # FP rate / load factor are rebuilt from the exact table
-            # (amortized-rare: fresh buckets carry 4× headroom).
-            delta = store.read_delta(spark, "url_seen", seen_version)
-            if self.seen_mode == "cuckoo":
-                obs_ck = Observation()
-                new_f = update_cuckoo(filters, delta, cfg=rcfg).observe(
-                    obs_ck,
-                    F.sum(
-                        F.when(F.col("slots").isNull(), 1).otherwise(0)
-                    ).alias("overflow"),
-                    F.sum(F.coalesce(F.size("slots"), F.lit(0))).alias("ints"),
-                )
-                fv = store.write(self._ftable, new_f, meta=self._bloom_meta(round_no))
-                vals = obs_ck.get
-                if int(vals["overflow"] or 0):
-                    written = store.read(spark, self._ftable)
-                    overflow = [
-                        r[0]
-                        for r in written.where(F.col("slots").isNull())
-                        .select("bucket")
-                        .collect()
-                    ]
-                    rebuilt = build_cuckoo(
-                        store.read(spark, "url_seen").where(
-                            F.col("bucket").isin(overflow)
-                        ),
-                        cfg=rcfg,
-                        headroom=4,
-                    )
-                    obs_rb = Observation()
-                    final = (
-                        written.where(~F.col("bucket").isin(overflow))
-                        .unionByName(rebuilt)
-                        .observe(
-                            obs_rb,
-                            F.sum(F.coalesce(F.size("slots"), F.lit(0))).alias("ints"),
-                        )
-                    )
-                    fv = store.write(self._ftable, final, meta=self._bloom_meta(round_no))
-                    store.amend_meta(
-                        self._ftable,
-                        {"total_slot_bytes": int(obs_rb.get["ints"] or 0) * 4},
-                        version=fv,
-                    )
-                else:
-                    store.amend_meta(
-                        self._ftable,
-                        {"total_slot_bytes": int(vals["ints"] or 0) * 4},
-                        version=fv,
-                    )
+            store.write(self._ftable, new_f, meta=fmeta)
+            if not int(obs_f.get["overflow"] or 0):
                 return
-            obs_bloom = Observation()
-            new_blooms = update_blooms(filters, delta, cfg=rcfg).observe(
-                obs_bloom,
-                F.sum("m").alias("bits"),
-                F.sum(F.when(F.col("bits").isNull(), 1).otherwise(0)).alias("overflow"),
+            blob = "slots" if self.seen_mode == "cuckoo" else "bits"
+            written = store.read(spark, self._ftable)
+            overflow = [
+                r[0] for r in written.where(F.col(blob).isNull()).select("bucket").collect()
+            ]
+            rebuilt = self._build_filters(
+                store.read(spark, "url_seen").where(F.col("bucket").isin(overflow)),
+                headroom=4,
             )
-            bv = store.write("blooms", new_blooms, meta=self._bloom_meta(round_no))
-            vals = obs_bloom.get
-            if int(vals["overflow"] or 0):
-                written = store.read(spark, "blooms")
-                overflow = [
-                    r[0]
-                    for r in written.where(F.col("bits").isNull())
-                    .select("bucket")
-                    .collect()
-                ]
-                rebuilt = build_blooms(
-                    store.read(spark, "url_seen").where(F.col("bucket").isin(overflow)),
-                    cfg=rcfg,
-                    headroom=4,
-                )
-                obs_rb = Observation()
-                final = (
-                    written.where(~F.col("bucket").isin(overflow))
-                    .unionByName(rebuilt)
-                    .observe(obs_rb, F.sum("m").alias("bits"))
-                )
-                bv = store.write("blooms", final, meta=self._bloom_meta(round_no))
-                store.amend_meta(
-                    "blooms", {"total_bits": int(obs_rb.get["bits"] or 0)}, version=bv
-                )
-            else:
-                store.amend_meta(
-                    "blooms", {"total_bits": int(vals["bits"] or 0)}, version=bv
-                )
+            final, _, fmeta = self._observe_filter(
+                written.where(~F.col("bucket").isin(overflow)).unionByName(rebuilt),
+                round_no,
+            )
+            store.write(self._ftable, final, meta=fmeta)
 
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(3) as pool:
             futs = [
-                pool.submit(_w_seen_and_blooms),
+                pool.submit(_w_seen_and_filters),
                 pool.submit(
                     store.write, "results", results, {"round": round_no}, None, True
                 ),
@@ -977,6 +944,7 @@ class FrontierCrawler:
                 },
             }
         )
+        self._frontier_rows = (fv, m.next_frontier)
         for df in (admitted, fetched, tagged, ur.probed):
             df.unpersist()
         return m
@@ -988,14 +956,20 @@ class FrontierCrawler:
         on_round=None,
     ) -> list[RoundMetrics]:
         """Run rounds until the frontier drains or max_rounds. The drain
-        check reuses the previous round's frontier-write observation — no
-        per-iteration count job.
+        check reuses the frontier-write observation of this object's last
+        round (or of ``init_from_seeds``) — no count job, unless the
+        frontier's current version is not one this object wrote (a fresh
+        object on an existing store, or a rollback).
 
         on_round: optional progress hook called with each RoundMetrics as
         the round commits (bench/monitoring use; exceptions propagate)."""
         start = (from_round if from_round is not None else self.resume()) + 1
         out: list[RoundMetrics] = []
         prev_next: int | None = None
+        if self._frontier_rows is not None:
+            fv, rows = self._frontier_rows
+            if self.store.current_version("frontier") == fv:
+                prev_next = rows
         aqe_key = "spark.sql.adaptive.enabled"
         prev_aqe = self.spark.conf.get(aqe_key, "true")
         if not self.cfg.frontier_aqe:

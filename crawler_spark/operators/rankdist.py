@@ -31,6 +31,16 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as a partition count; a value that
+    is not an integer (e.g. a platform's ``auto``) falls back to the
+    context's default parallelism."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except ValueError:
+        return spark.sparkContext.defaultParallelism
+
+
 def distributed_rank(
     df: DataFrame,
     order: list[Column],
@@ -43,7 +53,7 @@ def distributed_rank(
     clash = {c for c in df.columns if c in ("__rd_pid", "__rd_lrn", "__rd_off")}
     if clash:
         raise ValueError(f"distributed_rank internal column clash: {clash}")
-    parts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parts = num_partitions or shuffle_partitions(spark)
     ranged = df.repartitionByRange(parts, *order).withColumn(
         "__rd_pid", F.spark_partition_id()
     )

@@ -60,6 +60,16 @@ def get_spark(
         # to reuse (measured: >60% of round CPU). Size for the caches.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.ui.enabled", "false")
+        # Generated-class cache (static: set before the session starts).
+        # The frontier is an iterative loop that re-plans the same
+        # DataFrame program every round; one round touches about 130
+        # generated classes, and a round → retract → round episode about
+        # 180. With the default 100 entries the LRU evicted each class
+        # before the next round asked for it again, so every steady-state
+        # round recompiled 119-131 classes with Janino (about 0.45 s, and
+        # churn in the JIT code cache). 1000 holds several episodes'
+        # working set; a steady-state round then compiles nothing.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
     )
     if extra_conf:

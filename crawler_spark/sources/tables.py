@@ -12,6 +12,17 @@ this module provides the same *contract* over plain parquet:
   frontier loop depends on — SURVEY §4 custom piece #4)
 - versions carry arbitrary metadata (round number, lineage) and can be
   rolled back to
+- reads pass the schema to the parquet reader when it is known, so a
+  read plans without a job: the store remembers, in memory only, the
+  schema of every version directory it wrote itself (the recursive
+  all-nullable form, which is what Spark's parquet writer stores, or the
+  pyarrow schema of ``write_local``). A directory it did not write (a
+  second store on the same root, a resumed process) or a partitioned
+  write falls back to schema inference, one small job per read.
+  Manifests and ``state.json`` carry no schema; ``drop()`` forgets the
+  table's entries, because version paths restart after a drop, and an
+  entry is trusted only while the directory's inode and mtime are the
+  ones seen right after the write.
 
 Swap-in path for a real cluster: replace SnapshotStore with the Iceberg
 catalog; the frontier loop only uses read/write/rollback/current_version.
@@ -23,9 +34,16 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+_LOCAL_TYPES = {
+    "int": T.IntegerType(), "long": T.LongType(), "double": T.DoubleType(),
+    "boolean": T.BooleanType(), "string": T.StringType(),
+}
 
 
 @dataclass
@@ -35,10 +53,49 @@ class Version:
     meta: dict
 
 
+def _as_nullable(dt: T.DataType) -> T.DataType:
+    """Spark's ``DataType.asNullable``: every field, element and value
+    nullable, recursively — the schema a parquet write stores."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
 class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+        # version dir → (inode, mtime_ns, schema) of the dirs this object
+        # wrote; never persisted (see the module docstring)
+        self._schemas: dict[str, tuple[int, int, T.StructType]] = {}
+
+    def _remember(self, vdir: str, schema: T.StructType) -> None:
+        st = os.stat(vdir)
+        self._schemas[vdir] = (st.st_ino, st.st_mtime_ns, schema)
+
+    def _known_schema(self, vdir: str) -> T.StructType | None:
+        entry = self._schemas.get(vdir)
+        if entry is None:
+            return None
+        try:
+            st = os.stat(vdir)
+        except FileNotFoundError:
+            return None
+        return entry[2] if (st.st_ino, st.st_mtime_ns) == entry[:2] else None
+
+    def _read_parquet(self, spark: SparkSession, paths: list[str]) -> DataFrame:
+        """Read version dirs with their remembered schema when every one
+        is known and they agree; otherwise let Spark infer it."""
+        schemas = [self._known_schema(p) for p in paths]
+        if schemas and schemas[0] is not None and all(s == schemas[0] for s in schemas):
+            return spark.read.schema(schemas[0]).parquet(*paths)
+        return spark.read.parquet(*paths)
 
     # ------------------------------------------------------------ paths --
     def _tdir(self, table: str) -> str:
@@ -75,11 +132,17 @@ class SnapshotStore:
         self,
         table: str,
         df: DataFrame,
-        meta: dict | None = None,
+        meta: dict | Callable[[], dict] | None = None,
         partition_by: list[str] | None = None,
         append: bool = False,
     ) -> int:
         """Write df as the table's next version; returns the version number.
+
+        ``meta`` may be a callable: it is called after the parquet write
+        and before the manifest swap, for facts only known once the
+        write's Observation fires (e.g. the filter's total bits, read back
+        next round without a job) — one manifest swap instead of a write
+        and an ``amend_meta``.
 
         append=True emulates an Iceberg append snapshot: the new version's
         segment list = previous version's segments + the new delta dir, so
@@ -96,6 +159,16 @@ class SnapshotStore:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(vdir)
+        if not partition_by:  # partition columns' types are inferred from paths
+            self._remember(vdir, _as_nullable(df.schema))
+        if callable(meta):
+            meta = meta()
+        self._append_version(table, m, next_v, vdir, meta, append)
+        return next_v
+
+    def _append_version(
+        self, table: str, m: dict, next_v: int, vdir: str, meta: dict | None, append: bool
+    ) -> None:
         segments = [vdir]
         if append and m["current"] is not None:
             prev = next(e for e in m["versions"] if e["version"] == m["current"])
@@ -110,7 +183,6 @@ class SnapshotStore:
         )
         m["current"] = next_v
         self._commit_manifest(table, m)
-        return next_v
 
     def amend_meta(self, table: str, patch: dict, version: int | None = None) -> None:
         """Merge ``patch`` into a version's meta after the write — for
@@ -154,20 +226,11 @@ class SnapshotStore:
             pa.Table.from_arrays(arrays, schema=pa.schema(fields)),
             os.path.join(vdir, "part-00000.parquet"),
         )
-        segments = [vdir]
-        if append and m["current"] is not None:
-            prev = next(e for e in m["versions"] if e["version"] == m["current"])
-            segments = prev.get("segments", [prev["path"]]) + [vdir]
-        m["versions"].append(
-            {
-                "version": next_v,
-                "path": vdir,
-                "segments": segments,
-                "meta": {**(meta or {}), "ts": time.time()},
-            }
+        self._remember(
+            vdir,
+            T.StructType([T.StructField(n.strip(), _LOCAL_TYPES[t.strip()]) for n, t in cols]),
         )
-        m["current"] = next_v
-        self._commit_manifest(table, m)
+        self._append_version(table, m, next_v, vdir, meta, append)
         return next_v
 
     def read_delta(self, spark: SparkSession, table: str, version: int) -> DataFrame:
@@ -178,7 +241,7 @@ class SnapshotStore:
         m = self._read_manifest(table)
         for entry in m["versions"]:
             if entry["version"] == version:
-                return spark.read.parquet(entry["path"])
+                return self._read_parquet(spark, [entry["path"]])
         raise FileNotFoundError(f"table {table!r} version {version} not found")
 
     def read(self, spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
@@ -188,7 +251,7 @@ class SnapshotStore:
             raise FileNotFoundError(f"table {table!r} has no committed version")
         for entry in m["versions"]:
             if entry["version"] == v:
-                return spark.read.parquet(*entry.get("segments", [entry["path"]]))
+                return self._read_parquet(spark, entry.get("segments", [entry["path"]]))
         raise FileNotFoundError(f"table {table!r} version {v} not found")
 
     # ------------------------------------------------------- round state --
@@ -240,3 +303,7 @@ class SnapshotStore:
 
     def drop(self, table: str) -> None:
         shutil.rmtree(self._tdir(table), ignore_errors=True)
+        prefix = self._tdir(table) + os.sep
+        for vdir in list(self._schemas):  # a snapshot: writer threads may add keys
+            if vdir.startswith(prefix):
+                self._schemas.pop(vdir, None)

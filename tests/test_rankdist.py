@@ -53,3 +53,20 @@ def test_empty_input(spark):
     out = distributed_rank(df, [F.desc("cnt"), F.col("w")], "r")
     assert out.count() == 0
     assert set(out.columns) == {"w", "cnt", "r"}
+
+
+def test_shuffle_partitions_falls_back_when_not_an_integer():
+    """A non-integer spark.sql.shuffle.partitions (e.g. a platform's
+    'auto') falls back to defaultParallelism instead of raising."""
+    from types import SimpleNamespace
+
+    from crawler_spark.operators.rankdist import shuffle_partitions
+
+    def session(value):
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=lambda key: value),
+            sparkContext=SimpleNamespace(defaultParallelism=3),
+        )
+
+    assert shuffle_partitions(session("auto")) == 3
+    assert shuffle_partitions(session("12")) == 12

@@ -1742,18 +1742,15 @@ def _q_cuckoo_unseen(spark, sf_dir):
     Bloom form can't do), then probe+exact-confirm the full candidate
     list. Output = per-source unseen counts; must equal the plain
     anti-join bit-exactly regardless of fingerprint collisions."""
-    from crawler_spark.operators.cuckoo import (
-        build_cuckoo,
-        delete_cuckoo,
-        filter_unseen_cuckoo,
-    )
+    from crawler_spark.operators.cuckoo import CUCKOO
+    from crawler_spark.operators.dedup import filter_unseen
 
     urls = _synth_source_urls(spark, sf_dir)
     ever = urls.where(F.col("doc_id") % 3 != 0)
     retracted = ever.where(F.col("doc_id") % 9 == 1)
     seen = ever.where(F.col("doc_id") % 9 != 1)
-    filters = delete_cuckoo(build_cuckoo(ever.select("surt")), retracted.select("surt"))
-    unseen = filter_unseen_cuckoo(urls, seen.select("surt"), filters)
+    filters = CUCKOO.delete(CUCKOO.build(ever.select("surt")), retracted.select("surt"))
+    unseen = filter_unseen(urls, seen.select("surt"), filters, probe=CUCKOO.probe_broadcast)
     return unseen.groupBy("source").agg(F.count(F.lit(1)).alias("n_unseen"))
 
 
@@ -1767,26 +1764,22 @@ def _q_cuckoo_retract_cycle(spark, sf_dir):
     of fingerprint collisions or bucket overflow-to-NULL. Output is
     one row per source with the three phase counts (scalar columns),
     so the driver canonicalizer can hash it."""
-    from crawler_spark.operators.cuckoo import (
-        build_cuckoo,
-        delete_cuckoo,
-        filter_unseen_cuckoo,
-        update_cuckoo,
-    )
+    from crawler_spark.operators.cuckoo import CUCKOO
+    from crawler_spark.operators.dedup import filter_unseen
 
     urls = _synth_source_urls(spark, sf_dir)
     ever = urls.where(F.col("doc_id") % 3 != 0)
     retracted = ever.where(F.col("doc_id") % 9 == 1)
     readmit = retracted.where(F.col("doc_id") % 18 == 1)
-    f_built = build_cuckoo(ever.select("surt"))
-    f_retracted = delete_cuckoo(f_built, retracted.select("surt"))
-    f_readmit = update_cuckoo(f_retracted, readmit.select("surt"))
+    f_built = CUCKOO.build(ever.select("surt"))
+    f_retracted = CUCKOO.delete(f_built, retracted.select("surt"))
+    f_readmit = CUCKOO.update(f_retracted, readmit.select("surt"))
     seen_built = ever
     seen_retracted = ever.where(F.col("doc_id") % 9 != 1)
     seen_readmit = seen_retracted.unionByName(readmit)
 
     def phase_counts(filters, seen, out_col):
-        u = filter_unseen_cuckoo(urls, seen.select("surt"), filters)
+        u = filter_unseen(urls, seen.select("surt"), filters, probe=CUCKOO.probe_broadcast)
         return u.groupBy("source").agg(F.count(F.lit(1)).alias(out_col))
 
     sources = urls.select("source").distinct()
@@ -1835,59 +1828,32 @@ def _q_cogroup_probe_unseen(spark, sf_dir):
     (~190 GB of cuckoo slots / Bloom bits) cannot ship to every
     executor, so candidates shuffle to their bucket and each bucket's
     blob crosses the wire once per bucket, never once per row. This
-    query FORCES the cogrouped probe for BOTH filter forms —
-    ``probe_blooms`` through filter_unseen_pruned's ``probe=`` slot and
-    ``probe_cuckoo`` with the explicit maybe→exact-confirm join — and
+    query FORCES the cogrouped probe (``SeenFilter.probe_cogroup``) for
+    BOTH filter forms through filter_unseen_pruned's ``probe=`` slot, and
     each per-source unseen count must equal the plain anti-join set
-    algebra bit-exactly (correctness lives in the confirm join, never
-    in the filter)."""
-    from crawler_spark.operators.bloom import bucket_of, build_blooms, probe_blooms
-    from crawler_spark.operators.cuckoo import build_cuckoo, probe_cuckoo
+    algebra bit-exactly (correctness lives in the confirm join, never in
+    the filter)."""
+    from crawler_spark.operators.bloom import BLOOM
+    from crawler_spark.operators.cuckoo import CUCKOO
     from crawler_spark.operators.dedup import filter_unseen_pruned
+    from crawler_spark.operators.seenfilter import bucket_of
 
     urls = _synth_source_urls(spark, sf_dir)
     seen = urls.where(F.col("doc_id") % 4 != 0)
     seen_b = seen.withColumn("bucket", bucket_of("surt"))
-    res = filter_unseen_pruned(
-        urls, seen_b, build_blooms(seen.select("surt")), probe=probe_blooms
-    )
-    bloom_counts = (
-        res.unseen.groupBy("source")
-        .agg(F.count(F.lit(1)).alias("n_unseen_bloom_cogroup"))
-        .localCheckpoint()
-    )
-    res.probed.unpersist()
-
-    # localCheckpoint: BOTH union branches read the cogrouped probe —
-    # without it the applyInPandas probe (and the filter build inside
-    # it) would execute twice per action, the exact double-execution
-    # filter_unseen_pruned's own persist of `probed` prevents
-    probed = probe_cuckoo(
-        urls, build_cuckoo(seen.select("surt"))
-    ).localCheckpoint()
-    unseen_c = probed.where(~F.col("_maybe_seen")).drop("_maybe_seen").unionByName(
-        probed.where(F.col("_maybe_seen"))
-        .drop("_maybe_seen")
-        .join(seen.select("surt"), "surt", "left_anti")
-    )
-    cuckoo_counts = unseen_c.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_unseen_cuckoo_cogroup")
-    )
-    return (
-        urls.select("source")
-        .distinct()
-        .join(bloom_counts, "source", "left")
-        .join(cuckoo_counts, "source", "left")
-        .select(
-            "source",
-            F.coalesce("n_unseen_bloom_cogroup", F.lit(0)).alias(
-                "n_unseen_bloom_cogroup"
-            ),
-            F.coalesce("n_unseen_cuckoo_cogroup", F.lit(0)).alias(
-                "n_unseen_cuckoo_cogroup"
-            ),
+    out = urls.select("source").distinct()
+    cols = []
+    for form, col in ((BLOOM, "n_unseen_bloom_cogroup"), (CUCKOO, "n_unseen_cuckoo_cogroup")):
+        res = filter_unseen_pruned(
+            urls, seen_b, form.build(seen.select("surt")), probe=form.probe_cogroup
         )
-    )
+        counts = (
+            res.unseen.groupBy("source").agg(F.count(F.lit(1)).alias(col)).localCheckpoint()
+        )
+        res.probed.unpersist()
+        out = out.join(counts, "source", "left")
+        cols.append(F.coalesce(col, F.lit(0)).alias(col))
+    return out.select("source", *cols)
 
 
 def _q_cluster_keep_best(spark, sf_dir):

@@ -9,7 +9,7 @@ corpus); the reference's HTTP stages map as in SURVEY §3.
 Per round (each step one declarative DataFrame op, shuffles noted):
 
   1. candidates  = frontier, first-wins deduped by surt        [shuffle: surt]
-  2. unseen      = Bloom-prefiltered exact anti-join vs seen   [shuffle: bucket; seen side pruned to Bloom-positive buckets]
+  2. unseen      = seen-filter-prefiltered exact anti-join vs seen [shuffle: bucket; seen side pruned to probe-positive buckets]
   3. tagged      = robots verdict + crawl_delay (broadcast join, cached)
   4. admitted/deferred = per-host politeness window, skew-salted [shuffle: host(+salt)]
   5. fetched/missing   = pages scan ⋈ broadcast(admitted)      [no shuffle of the corpus; copy-dedupe window over ~|admitted|]
@@ -17,7 +17,13 @@ Per round (each step one declarative DataFrame op, shuffles noted):
   7. failures   += missing (retry ≤ max_attempts, then permanent)
   8. frontier'   = deferred ∪ out-links of fetched (anti-joined next round) ∪ retryable failures
   9. url_seen   += admitted∖retryable (bucket-keyed, bucket-sorted);
-     blooms updated INCREMENTALLY from the round delta (O(delta), not O(seen))
+     seen filter updated INCREMENTALLY from the round delta (O(delta), not O(seen))
+
+The seen filter is one object picked from ``seen_mode`` at construction
+(operators/seenfilter.SeenFilter: ``bloom`` or ``cuckoo``). Every step
+calls that object — probe choice, update, delete, rebuild — and the one
+upkeep path ``_write_filters`` serves round, retract, rebucket and
+resume alike, so the two forms differ only inside their kernels.
  10. atomic round commit (state.json) — kill anywhere before it and resume
      replays the round; after it, the round is durable.
 
@@ -49,7 +55,6 @@ permanently-failed URL stops being scheduled.
 from __future__ import annotations
 
 import time
-from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -59,21 +64,8 @@ from pyspark.sql import types as T
 from crawler_spark.config import DEFAULT, EngineConfig
 from crawler_spark.functions.detector import confidence_rank, detect_udf
 from crawler_spark.functions.url import canonicalize_udf
-from crawler_spark.operators.bloom import (
-    BLOOM_HASH_VERSION,
-    bucket_of,
-    build_blooms,
-    required_buckets,
-    update_blooms,
-)
-from crawler_spark.operators.cuckoo import (
-    CUCKOO_HASH_VERSION,
-    build_cuckoo,
-    delete_cuckoo,
-    probe_cuckoo,
-    probe_cuckoo_broadcast,
-    update_cuckoo,
-)
+from crawler_spark.operators.bloom import BLOOM
+from crawler_spark.operators.cuckoo import CUCKOO
 from crawler_spark.operators.dedup import filter_unseen_pruned, first_wins
 from crawler_spark.operators.politeness import admit_per_host
 from crawler_spark.operators.robots import (
@@ -81,6 +73,7 @@ from crawler_spark.operators.robots import (
     gate_rfc9309,
     gate_tag,
 )
+from crawler_spark.operators.seenfilter import bucket_of
 from crawler_spark.sources.tables import SnapshotStore
 
 FRONTIER_SCHEMA = T.StructType(
@@ -217,18 +210,18 @@ class FrontierCrawler:
         # URL-seen accelerator form (the north rule's "Bloom/cuckoo"):
         # 'bloom' (default) = 10 bits/key, no deletion — retraction
         # rebuilds the affected bucket blobs from the exact table;
-        # 'cuckoo' = ~19 bytes/key partial-key filter with O(1) per-key
-        # DELETION (operators/cuckoo.delete_cuckoo), so retract() is a
-        # per-fingerprint update instead of a rebuild. Either way the
+        # 'cuckoo' = 19–38 bytes/key partial-key filter with O(1) per-key
+        # DELETION (operators/cuckoo.CuckooFilter.delete), so retract() is
+        # a per-fingerprint update instead of a rebuild. Either way the
         # exact url_seen table is the membership truth (probe maybe →
         # exact confirm), so the unseen set is identical across modes.
-        if seen_mode not in ("bloom", "cuckoo"):
+        # Each form keeps its blobs in its own snapshot table, so a store
+        # written in one mode fails fast when reopened in the other.
+        forms = {"bloom": BLOOM, "cuckoo": CUCKOO}
+        if seen_mode not in forms:
             raise ValueError(f"unknown seen_mode {seen_mode!r}")
         self.seen_mode = seen_mode
-        # snapshot-table name for the filter blobs: kept distinct per
-        # form so a store written in one mode fails fast when reopened
-        # in the other (resume reads meta from the mode's own table)
-        self._ftable = "blooms" if seen_mode == "bloom" else "cuckoo"
+        self.form = forms[seen_mode]
         if robots is not None:
             need = "rules" if robots_mode == "rfc9309" else "disallow_prefixes"
             if need not in robots.columns:
@@ -264,7 +257,7 @@ class FrontierCrawler:
         self._last_max_host: int | None = None
         # Bucket layout scales with the seen table: cfg.num_host_buckets is
         # the floor; required_buckets doubles it as the running seen count
-        # grows so per-bucket bloom blobs stay ≤ cfg.bloom_max_blob_bytes.
+        # grows so per-bucket filter blobs stay ≤ cfg.bloom_max_blob_bytes.
         self._num_buckets = cfg.num_host_buckets
         self._seen_total = 0
         # (frontier version, its row count) as last observed by this
@@ -301,54 +294,46 @@ class FrontierCrawler:
 
         return replace(self.cfg, num_host_buckets=self._num_buckets)
 
-    def _bloom_meta(self, round_no: int) -> dict:
+    def _filter_meta(self, round_no: int) -> dict:
         return {
             "round": round_no,
-            "hash_version": (
-                BLOOM_HASH_VERSION if self.seen_mode == "bloom" else CUCKOO_HASH_VERSION
-            ),
+            "hash_version": self.form.hash_version,
             "num_buckets": self._num_buckets,
         }
 
-    def _filter_version(self) -> int:
-        return BLOOM_HASH_VERSION if self.seen_mode == "bloom" else CUCKOO_HASH_VERSION
+    def _write_filters(self, filters: DataFrame, round_no: int) -> None:
+        """Write ``filters`` as the filter table's next version — the one
+        upkeep path of round, retract, rebucket and resume. The size hint
+        (the next round's broadcast-vs-cogroup probe gate) and the count
+        of NULL-blob buckets ride the write's Observation; the hint is
+        stored only when no bucket is NULL, because such a version is
+        superseded at once: its NULL buckets are rebuilt from the exact
+        url_seen rows (4× headroom, so amortized-rare) and written again."""
+        spark, store, form = self.spark, self.store, self.form
 
-    def _observe_filter(
-        self, filters: DataFrame, round_no: int
-    ) -> tuple[DataFrame, Observation, Callable[[], dict]]:
-        """Piggyback the filter set's size hint (the next round's
-        broadcast-vs-cogroup probe gate: total Bloom bits, or total cuckoo
-        slot bytes) and its overflowing-bucket count on the write of
-        ``filters``. Returns the observed frame, the Observation and a
-        meta callable for ``store.write``: the hint is stored only when
-        no bucket overflowed (an overflowed version is superseded by the
-        rebuild)."""
-        if self.seen_mode == "cuckoo":
-            blob, key = "slots", "total_slot_bytes"
-            size = F.sum(F.coalesce(F.size("slots"), F.lit(0))) * 4
-        else:
-            blob, key, size = "bits", "total_bits", F.sum("m")
-        obs = Observation()
-        observed = filters.observe(
-            obs,
-            size.alias("size"),
-            F.sum(F.when(F.col(blob).isNull(), 1).otherwise(0)).alias("overflow"),
-        )
+        def write(df: DataFrame) -> int:
+            obs = Observation()
+            observed = df.observe(
+                obs,
+                form.size_expr().alias("size"),
+                F.sum(F.when(F.col(form.blob).isNull(), 1).otherwise(0)).alias("overflow"),
+            )
 
-        def meta() -> dict:
-            vals = obs.get
-            if int(vals["overflow"] or 0):
-                return self._bloom_meta(round_no)
-            return {**self._bloom_meta(round_no), key: int(vals["size"] or 0)}
+            def meta() -> dict:
+                if int(obs.get["overflow"] or 0):
+                    return self._filter_meta(round_no)
+                return {**self._filter_meta(round_no), form.size_key: int(obs.get["size"] or 0)}
 
-        return observed, obs, meta
+            store.write(form.table, observed, meta=meta)
+            return int(obs.get["overflow"] or 0)
 
-    def _build_filters(self, seen: DataFrame, headroom: int = 1) -> DataFrame:
-        """Per-bucket filter blobs from the exact seen table, in the
-        session's seen_mode form."""
-        if self.seen_mode == "cuckoo":
-            return build_cuckoo(seen, cfg=self._rcfg(), headroom=headroom)
-        return build_blooms(seen, cfg=self._rcfg(), headroom=headroom)
+        if not write(filters):
+            return
+        written = store.read(spark, form.table)
+        overflow = [
+            r[0] for r in written.where(F.col(form.blob).isNull()).select("bucket").collect()
+        ]
+        write(form.rebuild(written, store.read(spark, "url_seen"), overflow, cfg=self._rcfg()))
 
     def _canonical_frontier(self, urls: DataFrame, depth_col, priority_col) -> DataFrame:
         """urls(url[, ...]) → frontier rows with canonical keys. When a
@@ -414,7 +399,8 @@ class FrontierCrawler:
         fv = self.store.write("frontier", frontier, meta={"round": 0})
         self.store.write("url_seen", empty_seen, meta={"round": 0})
         self.store.write(
-            self._ftable, self._build_filters(empty_seen), meta=self._bloom_meta(0)
+            self.form.table, self.form.build(empty_seen, cfg=self._rcfg()),
+            meta=self._filter_meta(0),
         )
         self.store.commit_state(
             {
@@ -424,7 +410,7 @@ class FrontierCrawler:
                 "seen_mode": self.seen_mode,
                 "tables": {
                     t: self.store.current_version(t)
-                    for t in ("frontier", "url_seen", self._ftable)
+                    for t in ("frontier", "url_seen", self.form.table)
                 },
             }
         )
@@ -463,17 +449,16 @@ class FrontierCrawler:
         # Filter blobs from a different hash/slot scheme would yield
         # false NEGATIVES on probe (silent url_seen breakage) — rebuild
         # from the exact seen table on any stamp mismatch.
-        meta = self.store.meta(self._ftable)
-        if meta.get("hash_version") != self._filter_version() or (
+        ftable = self.form.table
+        meta = self.store.meta(ftable)
+        if meta.get("hash_version") != self.form.hash_version or (
             meta.get("num_buckets") not in (None, self._num_buckets)
         ):
             seen = self.store.read(self.spark, "url_seen")
-            self.store.write(
-                self._ftable,
-                self._build_filters(seen, headroom=4),
-                meta=self._bloom_meta(int(state["round"])),
+            self._write_filters(
+                self.form.build(seen, cfg=self._rcfg(), headroom=4), int(state["round"])
             )
-            state["tables"][self._ftable] = self.store.current_version(self._ftable)
+            state["tables"][ftable] = self.store.current_version(ftable)
             self.store.commit_state(state)
         return int(state["round"])
 
@@ -492,15 +477,12 @@ class FrontierCrawler:
 
         Semantics: canonicalize ``urls(url)``, drop the matching rows
         from the exact ``url_seen`` table, and retire their filter
-        entries. This is where the two seen_mode forms differ at scale:
-
-        - ``cuckoo``: one O(1) fingerprint deletion per retracted key
-          (operators/cuckoo.delete_cuckoo) — O(|delta| + blob bytes)
-          total, the capability that justifies cuckoo's ~19 bytes/key
-          over the Bloom's 10 bits;
-        - ``bloom``: bits cannot be unset, so the affected buckets'
-          blobs are REBUILT from the exact table — O(bucket rows), not
-          O(delta).
+        entries with one ``SeenFilter.delete`` call. That call is where
+        the two seen_mode forms differ at scale: the cuckoo form removes
+        one fingerprint per retracted key (O(|delta| + blob bytes), the
+        capability that justifies its larger blobs); the Bloom form
+        cannot unset bits and rebuilds the touched buckets from the exact
+        rows left — O(bucket rows), not O(delta).
 
         Either way correctness does not depend on the filter update: a
         stale maybe only costs an exact-confirm row, and the exact
@@ -521,8 +503,7 @@ class FrontierCrawler:
         seen = store.read(spark, "url_seen")
         # only keys actually present may be deleted from a cuckoo filter
         # (deleting a never-inserted fingerprint could evict a live
-        # colliding key's occurrence — the standard cuckoo caveat); the
-        # same semi-join also gives bloom mode its affected-bucket list
+        # colliding key's occurrence — the standard cuckoo caveat)
         present = seen.join(F.broadcast(keys), "surt", "left_semi").persist()
         n = present.count()
         if n == 0:
@@ -537,20 +518,13 @@ class FrontierCrawler:
             remaining.sortWithinPartitions("bucket"),
             meta={"round": rnd, "retracted": n},
         )
-        filters = store.read(spark, self._ftable)
-        if self.seen_mode == "cuckoo":
-            new_f = delete_cuckoo(filters, present.select("surt"), cfg=self._rcfg())
-        else:
-            buckets = [r[0] for r in present.select("bucket").distinct().collect()]
-            rebuilt = self._build_filters(
-                store.read(spark, "url_seen").where(F.col("bucket").isin(buckets)),
-                headroom=4,
-            )
-            new_f = filters.where(~F.col("bucket").isin(buckets)).unionByName(rebuilt)
-        # keep the probe gate's size hint fresh across retraction versions
-        # too (same piggyback as the round-loop write)
-        new_f, _, fmeta = self._observe_filter(new_f, rnd)
-        store.write(self._ftable, new_f, meta=fmeta)
+        filters = store.read(spark, self.form.table)
+        self._write_filters(
+            self.form.delete(
+                filters, present.select("surt"), cfg=self._rcfg(), seen=remaining
+            ),
+            rnd,
+        )
         present.unpersist()
         # a fresh (un-resumed) crawler object tracks 0 — trust the state
         self._seen_total = max(
@@ -560,7 +534,7 @@ class FrontierCrawler:
         state["seen_mode"] = self.seen_mode
         state.setdefault("tables", {})
         state["tables"]["url_seen"] = store.current_version("url_seen")
-        state["tables"][self._ftable] = store.current_version(self._ftable)
+        state["tables"][self.form.table] = store.current_version(self.form.table)
         store.commit_state(state)
         return n
 
@@ -580,7 +554,7 @@ class FrontierCrawler:
 
         frontier = store.read(spark, "frontier")
         seen = store.read(spark, "url_seen")
-        filters = store.read(spark, self._ftable)
+        filters = store.read(spark, self.form.table)
 
         # 1. within-frontier dedupe: one candidate per surt. Order is fully
         #    deterministic: priority, then failure_count desc (a retrying
@@ -609,37 +583,15 @@ class FrontierCrawler:
         # 2. URL-seen anti-join: filter prefilter (Bloom word-probe or
         #    cuckoo slot-probe — same maybe/confirm contract, identical
         #    exact unseen set), exact confirm against probe-positive
-        #    buckets only. The bucket-prune collect inside is the round's
-        #    first job; it fills the probed cache and fires obs_cand.
-        if self.seen_mode == "cuckoo":
-            # broadcast the slot tables while they fit on every executor;
-            # beyond that, the cogrouped per-bucket probe (no single place
-            # ever holds all blobs) — same size rule as the Bloom pair,
-            # fed by the byte total piggybacked on the previous round's
-            # filter write (fallback: one tiny B-row aggregate)
-            tb = store.meta(self._ftable).get("total_slot_bytes")
-            if tb is None:
-                tb = (
-                    filters.agg(
-                        F.sum(F.coalesce(F.size("slots"), F.lit(0)))
-                    ).first()[0]
-                    or 0
-                ) * 4
-            probe = (
-                probe_cuckoo_broadcast
-                if tb <= cfg.bloom_broadcast_max_bytes
-                else probe_cuckoo
-            )
-        else:
-            probe = None
-        ur = filter_unseen_pruned(
-            candidates, seen, filters, cfg=rcfg,
-            total_bits=(
-                store.meta(self._ftable).get("total_bits")
-                if self.seen_mode == "bloom" else None
-            ),
-            probe=probe,
+        #    buckets only. The probe is the broadcast one while the filter
+        #    set fits every executor, the cogrouped one beyond, gated by
+        #    the size hint stored with the previous filter write. The
+        #    bucket-prune collect inside is the round's first job; it
+        #    fills the probed cache and fires obs_cand.
+        probe = self.form.probe_for(
+            filters, cfg, store.meta(self.form.table).get(self.form.size_key)
         )
+        ur = filter_unseen_pruned(candidates, seen, filters, cfg=rcfg, probe=probe)
         _tr("prune_probe")
         unseen = ur.unseen
 
@@ -818,36 +770,12 @@ class FrontierCrawler:
             store.write("url_seen", newly_seen, meta={"round": round_no}, append=True)
             # filter maintenance folds in ONLY this round's delta, computed
             # from the cached admitted/fetched frames (no read-back of the
-            # delta just written). Overflow detection and the size hint
-            # ride the write's Observation — the common path is ONE job.
-            # Buckets past their target FP rate / load factor are rebuilt
-            # from the exact table (amortized-rare: fresh buckets carry 4×
-            # headroom). It runs after the url_seen write rather than
-            # beside it: on the crawl_recrawl benchmark, the concurrent
-            # filter job gained about 5% throughput but raised the rounds
-            # and retractions whose process-tree RSS peaked past 3.7 GB
-            # from 3 to 10 in 24.
-            update = update_cuckoo if self.seen_mode == "cuckoo" else update_blooms
-            new_f, obs_f, fmeta = self._observe_filter(
-                update(filters, seen_delta, cfg=rcfg), round_no
-            )
-            store.write(self._ftable, new_f, meta=fmeta)
-            if not int(obs_f.get["overflow"] or 0):
-                return
-            blob = "slots" if self.seen_mode == "cuckoo" else "bits"
-            written = store.read(spark, self._ftable)
-            overflow = [
-                r[0] for r in written.where(F.col(blob).isNull()).select("bucket").collect()
-            ]
-            rebuilt = self._build_filters(
-                store.read(spark, "url_seen").where(F.col("bucket").isin(overflow)),
-                headroom=4,
-            )
-            final, _, fmeta = self._observe_filter(
-                written.where(~F.col("bucket").isin(overflow)).unionByName(rebuilt),
-                round_no,
-            )
-            store.write(self._ftable, final, meta=fmeta)
+            # delta just written); the common path is ONE job. It runs
+            # after the url_seen write rather than beside it: on the
+            # crawl_recrawl benchmark, the concurrent filter job gained
+            # about 5% throughput but raised the rounds and retractions
+            # whose process-tree RSS peaked past 3.7 GB from 3 to 10 in 24.
+            self._write_filters(self.form.update(filters, seen_delta, cfg=rcfg), round_no)
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -896,12 +824,12 @@ class FrontierCrawler:
         )
 
         # Bucket-layout maintenance: double the bucket count whenever the
-        # running seen total would push a bloom blob past the byte ceiling,
-        # rewriting seen (new bucket column, bucket-sorted) and rebuilding
-        # blooms as new snapshot versions. Geometric growth → amortized
-        # O(1) rewrites per key, like a vector resize.
+        # running seen total would push a filter blob past the byte
+        # ceiling, rewriting seen (new bucket column, bucket-sorted) and
+        # rebuilding the filters as new snapshot versions. Geometric
+        # growth → amortized O(1) rewrites per key, like a vector resize.
         self._seen_total += int(obs_seen.get["n"] or 0)
-        need_b = required_buckets(self._seen_total, cfg)
+        need_b = self.form.required_buckets(self._seen_total, cfg)
         if need_b > self._num_buckets:
             self._num_buckets = need_b
             rcfg2 = self._rcfg()
@@ -913,10 +841,9 @@ class FrontierCrawler:
             store.write(
                 "url_seen", rebucketed, meta={"round": round_no, "rebucketed_to": need_b}
             )
-            store.write(
-                self._ftable,
-                self._build_filters(store.read(spark, "url_seen"), headroom=4),
-                meta=self._bloom_meta(round_no),
+            self._write_filters(
+                self.form.build(store.read(spark, "url_seen"), cfg=rcfg2, headroom=4),
+                round_no,
             )
 
         if self.adaptive:
@@ -938,7 +865,7 @@ class FrontierCrawler:
                 "tables": {
                     t: self.store.current_version(t)
                     for t in (
-                        "frontier", "url_seen", self._ftable,
+                        "frontier", "url_seen", self.form.table,
                         "results", "failures", "metrics",
                     )
                 },

@@ -18,7 +18,6 @@ These run at *ingest* only: post-ingest queries read the materialized
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
@@ -26,7 +25,6 @@ from crawler_spark.oracle.reference_decode import (
     GZIP_MAGIC,
     decode_bulk,
     decode_with_headers,
-    gunzip_sniff,
 )
 
 
@@ -63,22 +61,3 @@ def decode_with_headers_udf(raw: pd.Series, content_type: pd.Series) -> pd.Serie
     for b, ct in zip(raw, content_type):
         out.append(decode_with_headers(None if b is None else bytes(b), ct))
     return pd.Series(out, dtype=object)
-
-
-@pandas_udf(T.BinaryType())
-def gunzip_udf(raw: pd.Series) -> pd.Series:
-    """Gzip sniff + tolerant decompress only (keeps bytes binary)."""
-    return pd.Series(
-        [None if b is None else gunzip_sniff(bytes(b)) for b in raw], dtype=object
-    )
-
-
-def with_text(df, raw_col: str = "html", rule: str = "bulk", mime_col: str = "mime"):
-    """Attach the decoded ``text`` column using the named decode rule."""
-    if rule == "bulk":
-        return df.withColumn("text", decode_bulk_udf(F.col(raw_col)))
-    if rule == "headers":
-        return df.withColumn(
-            "text", decode_with_headers_udf(F.col(raw_col), F.col(mime_col))
-        )
-    raise ValueError(f"unknown decode rule: {rule!r}")

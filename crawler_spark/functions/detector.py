@@ -138,11 +138,6 @@ def _detect_udf_raw(html: pd.Series) -> pd.DataFrame:
 detect_udf = _detect_udf_raw.asNondeterministic()
 
 
-def with_detection(df, text_col: str = "text", out_col: str = "detection"):
-    """Attach the detection struct to a DataFrame (one Arrow UDF stage)."""
-    return df.withColumn(out_col, detect_udf(F.col(text_col)))
-
-
 def confidence_rank(col: Column) -> Column:
     """Confidence → rank column (reference src/detectors/nextjs.py:239).
 

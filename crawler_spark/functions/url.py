@@ -197,22 +197,7 @@ def _canonicalize_udf_raw(urls: pd.Series) -> pd.DataFrame:
 canonicalize_udf = _canonicalize_udf_raw.asNondeterministic()
 
 
-def with_canonical(df, url_col: str = "url", out_col: str = "canon"):
-    """Attach the canonical struct to a DataFrame."""
-    return df.withColumn(out_col, canonicalize_udf(F.col(url_col)))
-
-
 # ---- built-in (JVM-side) expression builders for the aggregation queries ----
-
-
-def tld(domain: Column) -> Column:
-    """Last dot-separated label (reference examples/find_all_nextjs.py:68-71)."""
-    return F.element_at(F.split(domain, r"\."), -1)
-
-
-def is_subdomain(domain: Column) -> Column:
-    """domain.count('.') > 1 (reference examples/find_all_nextjs.py:82-84)."""
-    return F.size(F.split(domain, r"\.")) > 2
 
 
 # PSL-lite: the most common multi-label public suffixes (subset of the
@@ -249,15 +234,6 @@ def registrable_domain(host: Column) -> Column:
         .when(last2.isin(*TWO_LEVEL_SUFFIXES) & (n >= 3), last3)
         .otherwise(last2)
     )
-
-
-def host_bucket(surt_or_host: Column, num_buckets: int) -> Column:
-    """Stable partition bucket for a host/SURT key: pmod(xxhash64(k), N).
-
-    This is the partitioning key of the url_seen / frontier tables — the
-    local-parquet analog of Iceberg's ``bucket(N, host)`` transform.
-    """
-    return F.pmod(F.xxhash64(surt_or_host), F.lit(num_buckets)).cast("int")
 
 
 # Tracking/session query parameters every archive-grade canonicalizer

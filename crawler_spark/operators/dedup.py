@@ -2,9 +2,9 @@
 
 Reference semantics (SURVEY §2.4):
 - global URL-seen (src/crawler.py:54-55,181-186): drop a row if its URL was
-  ever emitted → Bloom-prefiltered exact anti-join against ``url_seen``;
+  ever emitted → seen-filter-prefiltered exact anti-join against ``url_seen``;
 - per-WARC (src/warc_processor.py:345-361): duplicates allowed across WARCs,
-  first record wins within one → partition-local window;
+  first record wins within one → :func:`first_wins` over (warc_source, url);
 - domain-first-wins (examples/bulk_warc_search.py:178-188): one result per
   domain, earliest wins → window over domain.
 """
@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from crawler_spark.config import DEFAULT, EngineConfig
-from crawler_spark.operators.bloom import probe_blooms, probe_blooms_broadcast
+from crawler_spark.operators.bloom import BLOOM
 
 
 def first_wins(df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame:
@@ -32,17 +32,21 @@ def first_wins(df: DataFrame, keys: list[str], order: list[Column]) -> DataFrame
 def filter_unseen(
     candidates: DataFrame,
     seen: DataFrame | None,
-    blooms: DataFrame | None = None,
+    filters: DataFrame | None = None,
     key_col: str = "surt",
     cfg: EngineConfig = DEFAULT,
+    probe=None,
 ) -> DataFrame:
     """Rows of ``candidates`` whose key is NOT in ``seen`` — exactly.
 
-    With blooms: probe first; Bloom-negative rows are provably unseen and
-    bypass the anti-join (at a 10^10-row seen table this is the difference
-    between shuffling the whole frontier and shuffling only the ~few %% of
-    Bloom positives). Bloom-positive rows are confirmed exactly, so false
-    positives never drop a URL.
+    With a seen filter: probe first; probe-negative rows are provably
+    unseen and bypass the anti-join (at a 10^10-row seen table this is the
+    difference between shuffling the whole frontier and shuffling only the
+    ~few %% of positives). Positive rows are confirmed exactly, so false
+    positives never drop a URL and a filter delete never resurrects one.
+    ``probe`` is the form's probe (``SeenFilter.probe_broadcast`` or
+    ``probe_cogroup``); without it ``filters`` is a Bloom table and the
+    probe is chosen by its size (:meth:`SeenFilter.probe_for`).
 
     ``seen`` must expose ``key_col``; candidates carrying a null key are
     dropped (unparseable URLs can never be scheduled).
@@ -51,9 +55,10 @@ def filter_unseen(
     if seen is None:
         return cand
     seen_keys = seen.select(key_col)
-    if blooms is None:
+    if filters is None:
         return cand.join(seen_keys, key_col, "left_anti")
-    probed = probe_blooms(cand, blooms, key_col, cfg)
+    probe = probe or BLOOM.probe_for(filters, cfg)
+    probed = probe(cand, filters, key_col, cfg)
     definitely_new = probed.where(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybe = probed.where(F.col("_maybe_seen")).drop("_maybe_seen")
     confirmed_new = maybe.join(seen_keys, key_col, "left_anti")
@@ -77,46 +82,37 @@ def filter_unseen_pruned(
     probe=None,
 ) -> UnseenResult:
     """The frontier-loop variant of :func:`filter_unseen`: exact, with the
-    seen side *pruned to Bloom-positive buckets* before the anti-join.
+    seen side *pruned to probe-positive buckets* before the anti-join.
 
-    The unseen stage is filter-structure agnostic: any probe with the
-    maybe/definitely-new contract slots in via ``probe=`` (signature of
-    :func:`crawler_spark.operators.bloom.probe_blooms_broadcast`) — the
-    cuckoo form (operators/cuckoo.probe_cuckoo_broadcast, with its
-    filter table as ``blooms``) yields the identical exact unseen set
-    because correctness lives in the confirm join, not the filter. The
-    default is the Bloom pair with size-based broadcast/cogroup
-    selection below.
+    The unseen stage is filter-form agnostic: ``probe=`` takes a form's
+    probe (``SeenFilter.probe_broadcast`` / ``probe_cogroup``, e.g.
+    ``CUCKOO.probe_broadcast`` with the cuckoo table as ``blooms``) and
+    yields the identical exact unseen set, because correctness lives in
+    the confirm join, not the filter. Without ``probe=``, ``blooms`` is a
+    Bloom table and :meth:`SeenFilter.probe_for` picks the probe: the
+    broadcast codegen probe while the filter set fits
+    cfg.bloom_broadcast_max_bytes, the cogrouped per-bucket probe beyond
+    (no single place ever holds the whole filter). ``total_bits`` is the
+    size hint stored with the blooms version (piggybacked on the previous
+    round's write, zero jobs); without it, one aggregate job over the
+    B-row table measures it.
 
-    ``seen`` must carry a ``bucket`` column (bloom.bucket_of, written
+    ``seen`` must carry a ``bucket`` column (seenfilter.bucket_of, written
     bucket-sorted): the ``bucket IN (...)`` predicate pushes down to
     parquet row-group stats — the Iceberg ``bucket(B, surt)`` partition-
     pruning analog. At a 10^10-row seen table this is what keeps the
     confirm join from shuffling the whole table when only a few buckets
-    have positives (early rounds: most candidates are Bloom-negative and
+    have positives (early rounds: most candidates are probe-negative and
     skip the join entirely).
 
     ``probed`` is cached here because BOTH output branches (definitely-new
     ∪ confirmed-new) read it — without the cache the candidate subtree
-    (window dedupe + bloom cogroup) would execute twice per action, and
+    (window dedupe + filter probe) would execute twice per action, and
     any Observation planted upstream would double-fire.
     """
     cand = candidates.where(F.col(key_col).isNotNull())
-    # Probe strategy: broadcast+codegen while the filter set is small
-    # enough to ship to every executor; cogrouped per-bucket probe beyond
-    # that (no single place ever holds the whole filter). The size comes
-    # from the blooms snapshot meta when the caller has it (piggybacked on
-    # the previous round's write Observation — zero jobs); the fallback is
-    # a 1-row aggregate job over the (tiny, B-row) blooms table.
     if probe is None:
-        if total_bits is None:
-            total_bits = blooms.agg(F.sum("m")).first()[0] or 0
-        total_bytes = total_bits // 8
-        probe = (
-            probe_blooms_broadcast
-            if total_bytes <= cfg.bloom_broadcast_max_bytes
-            else probe_blooms
-        )
+        probe = BLOOM.probe_for(blooms, cfg, total_bits)
     probed = probe(cand, blooms, key_col, cfg, bucket_out="bucket").persist()
     maybe_buckets = [
         r[0]
@@ -136,11 +132,6 @@ def filter_unseen_pruned(
     else:
         unseen = definitely_new
     return UnseenResult(unseen=unseen, probed=probed, maybe_buckets=maybe_buckets)
-
-
-def dedupe_per_warc(results: DataFrame) -> DataFrame:
-    """EP2 policy: first record wins within (warc_source, url)."""
-    return first_wins(results, ["warc_source", "url"], [F.col("warc_offset").asc()])
 
 
 def dedupe_domain_first_wins(results: DataFrame, order: list[Column]) -> DataFrame:

@@ -131,17 +131,6 @@ def count_by_confidence(results: DataFrame) -> DataFrame:
     return results.groupBy("confidence").agg(F.count("*").alias("n")).orderBy("confidence")
 
 
-def count_by_tld(results: DataFrame) -> DataFrame:
-    """examples/find_all_nextjs.py:63-80: group by last domain label, desc."""
-    from crawler_spark.functions.url import tld
-
-    return (
-        results.groupBy(tld(F.col("domain")).alias("tld"))
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), "tld")
-    )
-
-
 def top_domains(results: DataFrame, k: int = 10) -> DataFrame:
     """test_warc_domains.py:88-91: Counter(domains).most_common(k)."""
     return (

@@ -176,9 +176,6 @@ def _build_html(ids: np.ndarray, cls: np.ndarray, body: pd.Series) -> pd.Series:
     )
 
 
-_CHARSETS = ["utf-8", "iso-8859-1", "windows-1254"]
-
-
 def _encode_rows(ids: np.ndarray, html: pd.Series) -> tuple[list[bytes], list[str]]:
     """Encode + (maybe) gzip each page; returns (raw_bytes, mime)."""
     cs_idx = _uint(ids, 40, 100)
@@ -380,9 +377,6 @@ def generate_seeds(spark: SparkSession, n_seeds: int, n_pages: int) -> DataFrame
 
 # ---------------------------------------------------------------- robots --
 
-ROBOTS_SCHEMA = "host string, disallow_prefixes array<string>, crawl_delay double"
-
-
 def generate_robots(spark: SparkSession, sample_of_pages: DataFrame) -> DataFrame:
     """T5 robots: ~10% of hosts disallow /p/ prefixes ending in a digit
     class; ~5% set crawl_delay. Derived from the distinct hosts of a pages
@@ -403,29 +397,3 @@ def generate_robots(spark: SparkSession, sample_of_pages: DataFrame) -> DataFram
         .alias("disallow_prefixes"),
         F.when(h % 20 == 3, (h % 5 + 1).cast("double")).alias("crawl_delay"),
     )
-
-
-# --------------------------------------------------------------- cdx_index --
-
-CDX_SCHEMA = (
-    "urlkey string, ts string, url string, mime string, status int, "
-    "digest string, length bigint, offset bigint, filename string"
-)
-
-
-def generate_cdx(pages: DataFrame) -> DataFrame:
-    """T3 CDX records: one per page (FK on url), R1 shape
-    (reference src/cdx/client.py:115-136)."""
-    from crawler_spark.functions.url import canonicalize_udf
-
-    return pages.select(
-        canonicalize_udf("url").alias("c"),
-        F.date_format("warc_ts", "yyyyMMddHHmmss").alias("ts"),
-        "url",
-        "mime",
-        "status",
-        F.sha1(F.col("text")).alias("digest"),
-        F.length("html").cast("bigint").alias("length"),
-        F.col("warc_offset").alias("offset"),
-        F.col("warc_source").alias("filename"),
-    ).select(F.col("c.surt").alias("urlkey"), "ts", "url", "mime", "status", "digest", "length", "offset", "filename")

@@ -67,7 +67,6 @@ def encode_video(doc_id: int) -> bytes:
     )
 
 
-_ENCODERS = {"image": encode_image, "audio": encode_audio, "video": encode_video}
 MEDIA_TYPES = ("image", "audio", "video")
 
 

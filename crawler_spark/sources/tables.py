@@ -23,6 +23,9 @@ this module provides the same *contract* over plain parquet:
   table's entries, because version paths restart after a drop, and an
   entry is trusted only while the directory's inode and mtime are the
   ones seen right after the write.
+- manifests name version dirs relative to the table dir, so a store can
+  be moved or copied as a whole and resumed at its new root; absolute
+  entries written before that still resolve.
 
 Swap-in path for a real cluster: replace SnapshotStore with the Iceberg
 catalog; the frontier loop only uses read/write/rollback/current_version.
@@ -49,8 +52,9 @@ _LOCAL_TYPES = {
 @dataclass
 class Version:
     version: int
-    path: str
+    path: str  # the version's own dir, resolved against the table dir
     meta: dict
+    segments: list[str]  # the dirs the version reads, resolved likewise
 
 
 def _as_nullable(dt: T.DataType) -> T.DataType:
@@ -124,9 +128,27 @@ class SnapshotStore:
     def current_version(self, table: str) -> int | None:
         return self._read_manifest(table)["current"]
 
-    def versions(self, table: str) -> list[Version]:
+    def _version(self, table: str, entry: dict) -> Version:
+        def resolve(p: str) -> str:
+            return os.path.join(self._tdir(table), p)  # absolute p wins
+
+        return Version(
+            entry["version"], resolve(entry["path"]), entry.get("meta", {}),
+            [resolve(p) for p in entry.get("segments", [entry["path"]])],
+        )
+
+    def _find(self, table: str, version: int | None) -> Version:
         m = self._read_manifest(table)
-        return [Version(v["version"], v["path"], v.get("meta", {})) for v in m["versions"]]
+        v = version if version is not None else m["current"]
+        if v is None:
+            raise FileNotFoundError(f"table {table!r} has no committed version")
+        for entry in m["versions"]:
+            if entry["version"] == v:
+                return self._version(table, entry)
+        raise FileNotFoundError(f"table {table!r} version {v} not found")
+
+    def versions(self, table: str) -> list[Version]:
+        return [self._version(table, v) for v in self._read_manifest(table)["versions"]]
 
     def write(
         self,
@@ -169,14 +191,15 @@ class SnapshotStore:
     def _append_version(
         self, table: str, m: dict, next_v: int, vdir: str, meta: dict | None, append: bool
     ) -> None:
-        segments = [vdir]
+        rel = os.path.basename(vdir)
+        segments = [rel]
         if append and m["current"] is not None:
             prev = next(e for e in m["versions"] if e["version"] == m["current"])
-            segments = prev.get("segments", [prev["path"]]) + [vdir]
+            segments = prev.get("segments", [prev["path"]]) + [rel]
         m["versions"].append(
             {
                 "version": next_v,
-                "path": vdir,
+                "path": rel,
                 "segments": segments,
                 "meta": {**(meta or {}), "ts": time.time()},
             }
@@ -238,21 +261,10 @@ class SnapshotStore:
         the Iceberg incremental-read analog (changelog between snapshots).
         The frontier's bloom maintenance folds in just this delta instead
         of rescanning the whole table."""
-        m = self._read_manifest(table)
-        for entry in m["versions"]:
-            if entry["version"] == version:
-                return self._read_parquet(spark, [entry["path"]])
-        raise FileNotFoundError(f"table {table!r} version {version} not found")
+        return self._read_parquet(spark, [self._find(table, version).path])
 
     def read(self, spark: SparkSession, table: str, version: int | None = None) -> DataFrame:
-        m = self._read_manifest(table)
-        v = version if version is not None else m["current"]
-        if v is None:
-            raise FileNotFoundError(f"table {table!r} has no committed version")
-        for entry in m["versions"]:
-            if entry["version"] == v:
-                return self._read_parquet(spark, entry.get("segments", [entry["path"]]))
-        raise FileNotFoundError(f"table {table!r} version {v} not found")
+        return self._read_parquet(spark, self._find(table, version).segments)
 
     # ------------------------------------------------------- round state --
     # Atomic multi-table commit marker: a BFS round is durable only once

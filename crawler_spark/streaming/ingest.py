@@ -68,6 +68,7 @@ from crawler_spark.operators.bloom import (
     probe_blooms_broadcast,
     update_blooms,
 )
+from crawler_spark.operators.seenfilter import bucket_of
 from crawler_spark.plans.flagship import classify_bulk
 from crawler_spark.sources.corpus import PAGES_SCHEMA
 from crawler_spark.sources.tables import SnapshotStore
@@ -184,10 +185,7 @@ def stream_classify(
             spark.read.parquet(batch_dir)
             .select("warc_source", "url")
             .withColumn("_k", _key_col())
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("_k"), F.lit(cfg.num_host_buckets)).cast("int"),
-            )
+            .withColumn("bucket", bucket_of("_k", cfg))
             .observe(obs_emit, F.count(F.lit(1)).alias("emitted"))
         )
         seen_v = store.write(

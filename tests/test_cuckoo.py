@@ -1,4 +1,6 @@
-"""Cuckoo-filter URL-seen: no-false-negative, delete, JVM/numpy parity."""
+"""URL-seen filter contract, run over both forms (Bloom and cuckoo): no
+false negatives, unknown-bucket and NULL-blob semantics, JVM/numpy
+parity, update, delete, and exactness of the probe + confirm."""
 
 from __future__ import annotations
 
@@ -7,16 +9,16 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.config import EngineConfig
-from crawler_spark.operators.cuckoo import (
-    build_cuckoo,
-    contains_numpy,
-    delete_cuckoo,
-    filter_unseen_cuckoo,
-    probe_cuckoo_broadcast,
-    update_cuckoo,
-)
+from crawler_spark.operators.bloom import BLOOM
+from crawler_spark.operators.cuckoo import CUCKOO
+from crawler_spark.operators.dedup import filter_unseen
+from crawler_spark.operators.seenfilter import bucket_of
 
 CFG = EngineConfig(num_host_buckets=8)
+FORMS = (BLOOM, CUCKOO)
+# false-positive bound on fresh keys: ~1% at 10 bits/key; 8 slots of
+# 16-bit fingerprints give ~8/2^16
+FP_BOUND = {"blooms": 0.05, "cuckoo": 0.01}
 
 
 def _keys(spark, lo, hi, tag="p"):
@@ -35,106 +37,122 @@ def seen(spark):
 
 @pytest.fixture(scope="module")
 def filters(spark, seen):
-    f = build_cuckoo(seen, cfg=CFG).cache()
-    f.count()
-    yield f
-    f.unpersist()
+    """Each form's filters over ``seen``, keyed by form table name."""
+    out = {f.table: f.build(seen, cfg=CFG).cache() for f in FORMS}
+    for df in out.values():
+        df.count()
+    yield out
+    for df in out.values():
+        df.unpersist()
 
 
 @pytest.mark.spark
 def test_no_false_negatives(spark, seen, filters):
     """Every inserted key must probe maybe=True — a false negative would
     silently re-crawl (or worse, re-emit) a seen URL."""
-    probed = probe_cuckoo_broadcast(seen, filters, cfg=CFG)
-    assert probed.where(~F.col("_maybe_seen")).count() == 0
+    for form in FORMS:
+        probed = form.probe_broadcast(seen, filters[form.table], cfg=CFG)
+        assert probed.where(~F.col("_maybe_seen")).count() == 0, form.table
 
 
 @pytest.mark.spark
-def test_unknown_bucket_and_fp_rate(spark, filters):
-    """Fresh keys are mostly definitely-new; 16-bit fingerprints in 8
-    slots bound the FP rate far under 1%% (expected ~8/2^16)."""
+def test_unknown_bucket_and_fp_rate(spark, seen, filters):
+    """A bucket with no filter row is definitely-new; fresh keys in known
+    buckets are mostly definitely-new, within the form's FP bound."""
     fresh = _keys(spark, 10_000, 20_000, tag="new")
-    probed = probe_cuckoo_broadcast(fresh, filters, cfg=CFG)
-    fp = probed.where(F.col("_maybe_seen")).count()
-    assert fp / 10_000 < 0.01
+    for form in FORMS:
+        partial = filters[form.table].where(F.col("bucket") != 0)
+        probed = form.probe_broadcast(
+            seen.unionByName(fresh), partial, cfg=CFG, bucket_out="b"
+        ).cache()
+        assert probed.where((F.col("b") == 0) & F.col("_maybe_seen")).count() == 0
+        fp = probed.where(F.col("surt").endswith("new") & F.col("_maybe_seen")).count()
+        assert fp / 10_000 < FP_BOUND[form.table], form.table
+        probed.unpersist()
 
 
 @pytest.mark.spark
 def test_jvm_probe_matches_numpy(spark, seen, filters):
-    """The codegen probe and the reference numpy kernel are the same
+    """The codegen probe and the form's numpy kernel are the same
     arithmetic — any divergence is a correctness bug (false negatives)."""
     mixed = seen.limit(500).unionByName(_keys(spark, 7000, 7500, tag="x"))
-    probed = probe_cuckoo_broadcast(mixed, filters, cfg=CFG)
-    rows = (
-        probed.withColumns(
-            {
-                "_b": F.pmod(F.xxhash64("surt"), F.lit(CFG.num_host_buckets)),
-                "_h1": F.xxhash64("surt", F.lit(1)),
-                "_h2": F.xxhash64("surt", F.lit(2)),
-            }
-        )
-        .collect()
-    )
-    blobs = {r["bucket"]: (r["nb"], r["slots"]) for r in filters.collect()}
-    for r in rows:
-        nb, slots = blobs[int(r["_b"])]
-        want = bool(
-            contains_numpy(
-                nb, slots, np.array([r["_h1"]]), np.array([r["_h2"]])
-            )[0]
-        )
-        assert r["_maybe_seen"] == want, r["surt"]
+    hashes = {
+        "_b": F.pmod(F.xxhash64("surt"), F.lit(CFG.num_host_buckets)),
+        "_h1": F.xxhash64("surt", F.lit(1)),
+        "_h2": F.xxhash64("surt", F.lit(2)),
+    }
+    for form in FORMS:
+        f = filters[form.table]
+        rows = form.probe_broadcast(mixed, f, cfg=CFG).withColumns(hashes).collect()
+        blobs = {r["bucket"]: (r[form.size_col], r[form.blob]) for r in f.collect()}
+        for r in rows:
+            size, blob = blobs[int(r["_b"])]
+            want = bool(
+                form.contains(size, blob, np.array([r["_h1"]]), np.array([r["_h2"]]), CFG)[0]
+            )
+            assert r["_maybe_seen"] == want, (form.table, r["surt"])
 
 
 @pytest.mark.spark
 def test_delete_then_probe(spark, seen, filters):
-    """Deletes remove fingerprint occurrences: deleted keys flip to
-    definitely-new (minus rare fp collisions with survivors), and NO
-    surviving key may become a false negative."""
+    """Deleted keys flip to definitely-new (minus rare FP collisions with
+    survivors), NO surviving key becomes a false negative, and the
+    per-bucket counts drop by the deleted keys. The cuckoo form removes
+    fingerprints; the Bloom form rebuilds the touched buckets from the
+    exact rows it is given."""
     deleted = seen.where(F.xxhash64("surt", F.lit(99)) % 10 == 0).cache()
     n_del = deleted.count()
     assert n_del > 100
-    f2 = delete_cuckoo(filters, deleted, cfg=CFG).cache()
     survivors = seen.join(deleted, "surt", "left_anti")
-    probed_surv = probe_cuckoo_broadcast(survivors, f2, cfg=CFG)
-    assert probed_surv.where(~F.col("_maybe_seen")).count() == 0
-    probed_del = probe_cuckoo_broadcast(deleted, f2, cfg=CFG)
-    still_maybe = probed_del.where(F.col("_maybe_seen")).count()
-    assert still_maybe / n_del < 0.05  # only fp-collisions survive
-    # n bookkeeping: total n drops by exactly the removed count
-    n_total = sum(r["n"] for r in f2.collect())
-    assert n_total <= 5000 - n_del * 0.95
+    for form in FORMS:
+        f2 = form.delete(filters[form.table], deleted, cfg=CFG, seen=survivors).cache()
+        probed_surv = form.probe_broadcast(survivors, f2, cfg=CFG)
+        assert probed_surv.where(~F.col("_maybe_seen")).count() == 0, form.table
+        probed_del = form.probe_broadcast(deleted, f2, cfg=CFG)
+        still_maybe = probed_del.where(F.col("_maybe_seen")).count()
+        assert still_maybe / n_del < FP_BOUND[form.table], form.table
+        n_total = sum(r["n"] for r in f2.collect())
+        assert n_total <= 5000 - n_del * 0.95, form.table
+        f2.unpersist()
+    with pytest.raises(ValueError, match="seen="):
+        BLOOM.delete(filters[BLOOM.table], deleted, cfg=CFG)
     deleted.unpersist()
-    f2.unpersist()
 
 
 @pytest.mark.spark
 def test_update_delta_and_passthrough(spark, seen, filters):
-    """update_cuckoo folds a delta in; untouched buckets pass through
-    bit-identically; the union has no false negatives."""
-    f_head = build_cuckoo(seen, cfg=CFG, headroom=4).cache()
+    """update folds a delta in with no false negatives on the union; a
+    bucket the delta does not touch passes through unchanged."""
     delta = _keys(spark, 5000, 6000, tag="d")
-    f2 = update_cuckoo(f_head, delta, cfg=CFG).cache()
+    delta0 = delta.where(bucket_of("surt", CFG) == 0)
     union = seen.unionByName(delta)
-    probed = probe_cuckoo_broadcast(union, f2, cfg=CFG)
-    assert probed.where(~F.col("_maybe_seen")).count() == 0
-    f_head.unpersist()
-    f2.unpersist()
+    for form in FORMS:
+        f_head = form.build(seen, cfg=CFG, headroom=4).cache()
+        f2 = form.update(f_head, delta, cfg=CFG).cache()
+        probed = form.probe_broadcast(union, f2, cfg=CFG)
+        assert probed.where(~F.col("_maybe_seen")).count() == 0, form.table
+        before = {r["bucket"]: r for r in f_head.collect()}
+        after = {r["bucket"]: r for r in form.update(f_head, delta0, cfg=CFG).collect()}
+        assert after[0]["n"] == before[0]["n"] + delta0.count()
+        assert {b: r for b, r in after.items() if b != 0} == {
+            b: r for b, r in before.items() if b != 0
+        }, form.table
+        f_head.unpersist()
+        f2.unpersist()
 
 
 @pytest.mark.spark
 def test_overflow_goes_null_all_maybe(spark, seen):
-    """A bucket past its load target emits NULL slots and probes as
+    """A bucket past its capacity emits a NULL blob and probes as
     all-maybe — correctness degrades to the exact join, never drops."""
-    f1 = build_cuckoo(seen, cfg=CFG, headroom=1)
     big_delta = _keys(spark, 50_000, 80_000, tag="big")
-    f2 = update_cuckoo(f1, big_delta, cfg=CFG).cache()
-    assert f2.where(F.col("slots").isNull()).count() > 0
-    probed = probe_cuckoo_broadcast(
-        seen.unionByName(big_delta), f2, cfg=CFG
-    )
-    assert probed.where(~F.col("_maybe_seen")).count() == 0
-    f2.unpersist()
+    for form in FORMS:
+        f1 = form.build(seen, cfg=CFG, headroom=1)
+        f2 = form.update(f1, big_delta, cfg=CFG).cache()
+        assert f2.where(F.col(form.blob).isNull()).count() > 0, form.table
+        probed = form.probe_broadcast(seen.unionByName(big_delta), f2, cfg=CFG)
+        assert probed.where(~F.col("_maybe_seen")).count() == 0, form.table
+        f2.unpersist()
 
 
 @pytest.mark.spark
@@ -142,10 +160,13 @@ def test_filter_unseen_exactness(spark, seen, filters):
     """probe + exact confirm == plain anti-join, bit-exactly — the
     filter is an accelerator, never the truth."""
     cand = _keys(spark, 4000, 11_000)  # 1000 seen + 6000 new
-    got = {r["surt"] for r in filter_unseen_cuckoo(cand, seen, filters, cfg=CFG).collect()}
     want = {r["surt"] for r in cand.join(seen, "surt", "left_anti").collect()}
-    assert got == want
     assert len(want) == 6000
+    for form in FORMS:
+        got = filter_unseen(
+            cand, seen, filters[form.table], cfg=CFG, probe=form.probe_broadcast
+        )
+        assert {r["surt"] for r in got.collect()} == want, form.table
 
 
 @pytest.mark.spark
@@ -154,30 +175,29 @@ def test_crawl_retraction_flow(spark):
     a failed-fetch subset retracted, crawl 2's candidates re-admit
     exactly the retracted + brand-new URLs — set-exact against the
     anti-join truth, with the filter maintained incrementally (build →
-    delete → update), never rebuilt."""
+    delete → update)."""
     crawl1 = _keys(spark, 0, 3000)
-    f = build_cuckoo(crawl1, cfg=CFG, headroom=4)
     # 300 fetches failed permanently: retract so the next crawl retries
     failed = crawl1.where(F.xxhash64("surt") % 10 == 3).cache()
     n_failed = failed.count()
     assert n_failed > 100
-    f = delete_cuckoo(f, failed, cfg=CFG)
     seen = crawl1.join(failed, "surt", "left_anti").cache()
     # crawl 2 discovers: overlap with seen, the failed set, fresh URLs
     cand = _keys(spark, 2000, 4000)
-    got = {r["surt"] for r in filter_unseen_cuckoo(cand, seen, f, cfg=CFG).collect()}
     want = {r["surt"] for r in cand.join(seen, "surt", "left_anti").collect()}
-    assert got == want
-    # fold crawl 2's admissions in incrementally and verify no false
-    # negatives on the union
-    f2 = update_cuckoo(f, cand.join(seen, "surt", "left_anti"), cfg=CFG)
     all_seen = seen.unionByName(cand).distinct()
-    assert (
-        probe_cuckoo_broadcast(all_seen, f2, cfg=CFG)
-        .where(~F.col("_maybe_seen"))
-        .count()
-        == 0
-    )
+    for form in FORMS:
+        f = form.build(crawl1, cfg=CFG, headroom=4)
+        f = form.delete(f, failed, cfg=CFG, seen=seen)
+        got = filter_unseen(cand, seen, f, cfg=CFG, probe=form.probe_broadcast)
+        assert {r["surt"] for r in got.collect()} == want, form.table
+        # fold crawl 2's admissions in incrementally: no false negatives
+        # on the union
+        f2 = form.update(f, cand.join(seen, "surt", "left_anti"), cfg=CFG)
+        assert (
+            form.probe_broadcast(all_seen, f2, cfg=CFG).where(~F.col("_maybe_seen")).count()
+            == 0
+        ), form.table
     failed.unpersist()
     seen.unpersist()
 
@@ -188,16 +208,13 @@ def test_pruned_unseen_stage_bloom_cuckoo_equivalence(spark, seen, filters):
     agnostic: swapping the cuckoo probe in via probe= yields the
     IDENTICAL exact unseen set as the Bloom pair — correctness lives in
     the confirm join, the filter only prices it."""
-    from crawler_spark.operators.bloom import bucket_of, build_blooms
-    from crawler_spark.operators.cuckoo import probe_cuckoo_broadcast
     from crawler_spark.operators.dedup import filter_unseen_pruned
 
     seen_b = seen.withColumn("bucket", bucket_of("surt", CFG))
     cand = _keys(spark, 4500, 9000)
-    blooms = build_blooms(seen, cfg=CFG)
-    r_bloom = filter_unseen_pruned(cand, seen_b, blooms, cfg=CFG)
+    r_bloom = filter_unseen_pruned(cand, seen_b, filters[BLOOM.table], cfg=CFG)
     r_cuckoo = filter_unseen_pruned(
-        cand, seen_b, filters, cfg=CFG, probe=probe_cuckoo_broadcast
+        cand, seen_b, filters[CUCKOO.table], cfg=CFG, probe=CUCKOO.probe_broadcast
     )
     got_b = {r["surt"] for r in r_bloom.unseen.collect()}
     got_c = {r["surt"] for r in r_cuckoo.unseen.collect()}

@@ -1,4 +1,5 @@
-"""URL-seen: Bloom prefilter + exact anti-join — set-exactness guarantees."""
+"""URL-seen: seen-filter prefilter + exact anti-join — set-exactness
+guarantees, run over both filter forms; dedupe policies."""
 
 from __future__ import annotations
 
@@ -6,7 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.config import EngineConfig
-from crawler_spark.operators.bloom import build_blooms, probe_blooms
+from crawler_spark.operators.bloom import BLOOM
+from crawler_spark.operators.cuckoo import CUCKOO
 from crawler_spark.operators.dedup import (
     dedupe_domain_first_wins,
     filter_unseen,
@@ -15,6 +17,7 @@ from crawler_spark.operators.dedup import (
 )
 
 CFG = EngineConfig(num_host_buckets=8)
+FORMS = (BLOOM, CUCKOO)
 
 
 @pytest.fixture(scope="module")
@@ -29,35 +32,42 @@ def seen(spark):
 
 @pytest.mark.spark
 def test_bloom_no_false_negatives(spark, seen):
-    """Every seen key must probe positive — Bloom filters never lie 'new'."""
-    blooms = build_blooms(seen, cfg=CFG)
-    probed = probe_blooms(seen, blooms, cfg=CFG)
-    assert probed.where(~F.col("_maybe_seen")).count() == 0
+    """Every seen key must probe positive through the cogrouped probe —
+    a seen filter never lies 'new'."""
+    for form in FORMS:
+        probed = form.probe_cogroup(seen, form.build(seen, cfg=CFG), cfg=CFG)
+        assert probed.where(~F.col("_maybe_seen")).count() == 0, form.table
 
 
 @pytest.mark.spark
 def test_bloom_fp_rate_reasonable(spark, seen):
-    blooms = build_blooms(seen, cfg=CFG)
     fresh = spark.range(100000, 103000).select(
         F.concat(F.lit("com,site"), F.col("id"), F.lit(")/p")).alias("surt")
     )
-    fp = probe_blooms(fresh, blooms, cfg=CFG).where(F.col("_maybe_seen")).count()
-    # 10 bits/key, 6 hashes → theoretical fp ~1%; allow slack
-    assert fp / 3000 < 0.05
+    # Bloom: 10 bits/key, 6 hashes → theoretical fp ~1%; cuckoo ~8/2^16;
+    # allow slack
+    for form, bound in ((BLOOM, 0.05), (CUCKOO, 0.01)):
+        probed = form.probe_cogroup(fresh, form.build(seen, cfg=CFG), cfg=CFG)
+        assert probed.where(F.col("_maybe_seen")).count() / 3000 < bound, form.table
 
 
 @pytest.mark.spark
 def test_filter_unseen_exact_with_and_without_bloom(spark, seen):
-    """Bloom path and plain anti-join path return identical sets —
+    """Filtered paths (each form's cogrouped probe, and the size-chosen
+    Bloom default) and the plain anti-join path return identical sets —
     false positives are always confirmed away."""
     cand = spark.range(4000, 7000).select(
         F.concat(F.lit("com,site"), F.col("id"), F.lit(")/p")).alias("surt")
     )
-    blooms = build_blooms(seen, cfg=CFG)
-    with_bloom = {r["surt"] for r in filter_unseen(cand, seen, blooms, cfg=CFG).collect()}
-    plain = {r["surt"] for r in filter_unseen(cand, seen, None).collect()}
     expect = {f"com,site{i})/p" for i in range(5000, 7000)}
-    assert with_bloom == plain == expect
+    assert {r["surt"] for r in filter_unseen(cand, seen, None).collect()} == expect
+    blooms = BLOOM.build(seen, cfg=CFG)
+    assert {r["surt"] for r in filter_unseen(cand, seen, blooms, cfg=CFG).collect()} == expect
+    for form in FORMS:
+        got = filter_unseen(
+            cand, seen, form.build(seen, cfg=CFG), cfg=CFG, probe=form.probe_cogroup
+        )
+        assert {r["surt"] for r in got.collect()} == expect, form.table
 
 
 @pytest.mark.spark
@@ -92,78 +102,75 @@ def test_merge_runs(spark):
 @pytest.mark.spark
 def test_broadcast_probe_matches_cogroup_probe(spark):
     """The pure-JVM broadcast probe and the cogrouped pandas probe must
-    agree bit-for-bit on the same serialized filters (same pmod-int64
-    position arithmetic)."""
-    from crawler_spark.operators.bloom import (
-        build_blooms,
-        probe_blooms,
-        probe_blooms_broadcast,
-    )
-
+    agree bit-for-bit on the same serialized filters (same position /
+    slot arithmetic), for both forms."""
     seen = spark.createDataFrame(
         [(f"com,example,h{i % 97})/p/{i}",) for i in range(0, 4000, 2)], "surt string"
     )
-    blooms = build_blooms(seen, cfg=CFG).cache()
     cand = spark.createDataFrame(
         [(f"com,example,h{i % 97})/p/{i}",) for i in range(1000, 3000)], "surt string"
     )
-    a = {
-        (r["surt"], r["_maybe_seen"])
-        for r in probe_blooms(cand, blooms, cfg=CFG).collect()
-    }
-    b = {
-        (r["surt"], r["_maybe_seen"])
-        for r in probe_blooms_broadcast(cand, blooms, cfg=CFG).collect()
-    }
-    assert a == b
-    # all truly-seen rows flagged maybe (no false negatives) in BOTH
     seen_set = {r["surt"] for r in seen.collect()}
-    for surt, maybe in b:
-        if surt in seen_set:
-            assert maybe
-    blooms.unpersist()
+    for form in FORMS:
+        filters = form.build(seen, cfg=CFG).cache()
+        a = {
+            (r["surt"], r["_maybe_seen"])
+            for r in form.probe_cogroup(cand, filters, cfg=CFG).collect()
+        }
+        b = {
+            (r["surt"], r["_maybe_seen"])
+            for r in form.probe_broadcast(cand, filters, cfg=CFG).collect()
+        }
+        assert a == b, form.table
+        # all truly-seen rows flagged maybe (no false negatives) in BOTH
+        for surt, maybe in b:
+            if surt in seen_set:
+                assert maybe, (form.table, surt)
+        filters.unpersist()
+
+
+# bytes per element of each blob column: array<long> / array<int>
+BLOB_WIDTH = {"bits": 8, "slots": 4}
 
 
 def test_required_buckets_keeps_blobs_bounded():
-    """Pure math: the derived bucket count caps expected per-bucket blob
-    bytes at cfg.bloom_max_blob_bytes for any seen-count, growing as
-    power-of-two multiples of the configured floor."""
-    from crawler_spark.config import EngineConfig
-    from crawler_spark.operators.bloom import required_buckets
-
+    """Pure math: for each form, the derived bucket count keeps the blob
+    the form's own sizing gives an average bucket (with the update
+    headroom of 4) under cfg.bloom_max_blob_bytes for any seen-count,
+    growing as power-of-two multiples of the configured floor."""
     cfg = EngineConfig(num_host_buckets=64, bloom_max_blob_bytes=16 << 20)
-    bytes_per_key = cfg.bloom_bits_per_key * 4 / 8
-    prev = 0
-    for total in (0, 10**4, 10**6, 10**8, 10**10, 10**12):
-        b = required_buckets(total, cfg)
-        assert total * bytes_per_key / b <= cfg.bloom_max_blob_bytes
-        assert b % cfg.num_host_buckets == 0 and (b // cfg.num_host_buckets) & (
-            (b // cfg.num_host_buckets) - 1
-        ) == 0  # floor × power of two
-        assert b >= prev
-        prev = b
-    # sanity at the north-rule scale: 10^10 keys stay ≤ 16 MB per blob
-    assert 10**10 * bytes_per_key / required_buckets(10**10, cfg) <= 16 << 20
+    for form in FORMS:
+        prev = 0
+        for total in (0, 10**4, 10**6, 10**8, 10**10, 10**12):
+            b = form.required_buckets(total, cfg)
+            per_bucket = -(-total // b)
+            blob = form.blob_bytes(form.size_for(per_bucket, 4, cfg))
+            assert blob <= cfg.bloom_max_blob_bytes, (form.table, total, b, blob)
+            assert b % cfg.num_host_buckets == 0 and (b // cfg.num_host_buckets) & (
+                (b // cfg.num_host_buckets) - 1
+            ) == 0  # floor × power of two
+            assert b >= prev
+            prev = b
 
 
 @pytest.mark.spark
 def test_built_blob_sizes_bounded_across_simulated_growth(spark):
-    """Actually build blooms at growing key counts with the derived bucket
-    count and measure the serialized blobs: every blob stays under the
-    ceiling (with hash-imbalance slack), across a growth that forces two
-    bucket doublings."""
+    """Actually build each form's filters at growing key counts with the
+    derived bucket count and measure the serialized blobs: every blob
+    stays under the ceiling (with hash-imbalance slack), across a growth
+    that forces two bucket doublings."""
     from dataclasses import replace
 
-    from crawler_spark.config import EngineConfig
-    from crawler_spark.operators.bloom import build_blooms, required_buckets
-
     cfg = EngineConfig(num_host_buckets=4, bloom_max_blob_bytes=4096)
-    for n in (200, 2000, 8000):
-        b = required_buckets(n, cfg)
-        keys = spark.range(n).select(
-            F.concat(F.lit("com,ex)/k/"), F.col("id")).alias("surt")
-        )
-        blobs = build_blooms(keys, cfg=replace(cfg, num_host_buckets=b), headroom=4).collect()
-        max_blob = max(8 * len(r["bits"]) for r in blobs)
-        assert max_blob <= cfg.bloom_max_blob_bytes * 1.5, (n, b, max_blob)
-    assert required_buckets(8000, cfg) > required_buckets(200, cfg)
+    for form in FORMS:
+        for n in (200, 2000, 8000):
+            b = form.required_buckets(n, cfg)
+            keys = spark.range(n).select(
+                F.concat(F.lit("com,ex)/k/"), F.col("id")).alias("surt")
+            )
+            blobs = form.build(
+                keys, cfg=replace(cfg, num_host_buckets=b), headroom=4
+            ).collect()
+            max_blob = max(BLOB_WIDTH[form.blob] * len(r[form.blob]) for r in blobs)
+            assert max_blob <= cfg.bloom_max_blob_bytes * 1.5, (form.table, n, b, max_blob)
+        assert form.required_buckets(8000, cfg) > form.required_buckets(200, cfg)

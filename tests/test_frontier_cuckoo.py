@@ -165,36 +165,68 @@ def test_bloom_retract_rebuilds_and_readmits(spark, corpus, tmp_path):
 
 @pytest.mark.spark
 def test_cogrouped_probe_matches_broadcast(spark):
-    """probe_cuckoo (cogrouped, beyond-broadcast form) and
-    probe_cuckoo_broadcast agree bit-for-bit on seen and unseen keys,
-    including fresh-bucket (definitely-new) candidates."""
-    from crawler_spark.config import EngineConfig
-    from crawler_spark.operators.cuckoo import build_cuckoo
+    """The cogrouped (beyond-broadcast) probe, the broadcast probe and the
+    numpy reference agree bit-for-bit for both forms — on seen and unseen
+    keys, on a bucket with no filter row (definitely-new) and on a bucket
+    whose blob is NULL (all-maybe)."""
+    import numpy as np
+
+    from crawler_spark.operators.bloom import BLOOM
+    from crawler_spark.operators.cuckoo import CUCKOO
 
     cfg = EngineConfig(num_host_buckets=4)
     seen = spark.createDataFrame(
         [(f"com,example)/p/{i}",) for i in range(200)], "surt string"
     )
-    filters = build_cuckoo(seen, cfg=cfg).persist()
+    seen_keys = {f"com,example)/p/{i}" for i in range(200)}
     cand = spark.createDataFrame(
         [(f"com,example)/p/{i}",) for i in range(150, 350)]
         + [(f"org,new)/q/{i}",) for i in range(40)],
         "surt string",
     )
-    from crawler_spark.operators.cuckoo import probe_cuckoo
+    hashes = {
+        "_b": F.pmod(F.xxhash64("surt"), F.lit(cfg.num_host_buckets)),
+        "_h1": F.xxhash64("surt", F.lit(1)),
+        "_h2": F.xxhash64("surt", F.lit(2)),
+    }
+    for form in (BLOOM, CUCKOO):
+        # bucket 0 has no filter row, bucket 1 a NULL blob
+        filters = (
+            form.build(seen, cfg=cfg)
+            .where(F.col("bucket") != 0)
+            .withColumn(
+                form.blob,
+                F.when(F.col("bucket") == 1, F.lit(None)).otherwise(F.col(form.blob)),
+            )
+            .persist()
+        )
+        blobs = {r["bucket"]: (r[form.size_col], r[form.blob]) for r in filters.collect()}
 
-    bc = {
-        r["surt"]: r["_maybe_seen"]
-        for r in probe_cuckoo_broadcast(cand, filters, "surt", cfg).collect()
-    }
-    cg = {
-        r["surt"]: r["_maybe_seen"]
-        for r in probe_cuckoo(cand, filters, "surt", cfg).collect()
-    }
-    assert bc == cg
-    # every actually-seen key must probe maybe (no false negatives)
-    assert all(bc[f"com,example)/p/{i}"] for i in range(150, 200))
-    filters.unpersist()
+        def reference(r):
+            if int(r["_b"]) not in blobs:
+                return False
+            size, blob = blobs[int(r["_b"])]
+            if blob is None:
+                return True
+            return bool(
+                form.contains(size, blob, np.array([r["_h1"]]), np.array([r["_h2"]]), cfg)[0]
+            )
+
+        rows = form.probe_broadcast(cand, filters, "surt", cfg).withColumns(hashes).collect()
+        bc = {r["surt"]: r["_maybe_seen"] for r in rows}
+        cg = {
+            r["surt"]: r["_maybe_seen"]
+            for r in form.probe_cogroup(cand, filters, "surt", cfg).collect()
+        }
+        assert bc == cg, form.table
+        assert bc == {r["surt"]: reference(r) for r in rows}, form.table
+        buckets = {int(r["_b"]) for r in rows}
+        assert {0, 1} <= buckets, buckets  # both edge cases are exercised
+        # every actually-seen key in a bucket with a filter row probes maybe
+        assert all(
+            bc[r["surt"]] for r in rows if r["surt"] in seen_keys and int(r["_b"]) != 0
+        ), form.table
+        filters.unpersist()
 
 
 @pytest.mark.spark

@@ -74,7 +74,7 @@ def test_overflow_rebuild_leaves_exact_filters(spark, corpus, crawls, mode):
     from the exact table leaves no NULL blob behind, and the seen and
     unseen sets equal the oracle's."""
     store, crawler, metrics = crawls[mode]
-    ftable, blob = crawler._ftable, BLOB[mode]
+    ftable, blob = crawler.form.table, BLOB[mode]
     assert len(metrics) == ROUNDS
     # the overflow path ran: round 2 wrote a version with NULL blobs,
     # then the rebuilt one
@@ -116,14 +116,13 @@ def test_read_schema_equals_inferred_for_every_crawl_table(spark, crawls, mode):
     schema Spark infers from the files, and from the remembered schema
     (no inference job) in the store that wrote it."""
     store, crawler, _ = crawls[mode]
-    tables = ("frontier", "url_seen", crawler._ftable, "results", "failures", "metrics")
+    tables = ("frontier", "url_seen", crawler.form.table, "results", "failures", "metrics")
     for t in tables:
-        manifest = store._read_manifest(t)
-        for entry in manifest["versions"]:
-            segments = entry["segments"]
+        for entry in store.versions(t):
+            segments = entry.segments
             assert all(store._known_schema(p) is not None for p in segments), (t, entry)
-            got = store.read(spark, t, version=entry["version"]).schema
-            assert got == spark.read.parquet(*segments).schema, (t, entry["version"])
+            got = store.read(spark, t, version=entry.version).schema
+            assert got == spark.read.parquet(*segments).schema, (t, entry.version)
     # a second store on the same root infers, and reads the same rows
     other = SnapshotStore(store.root)
     for t in tables:

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+
 import pytest
 
 from crawler_spark.sources.tables import SnapshotStore
@@ -52,7 +56,7 @@ def test_read_reuses_written_schema_without_a_job(spark, tmp_path):
         before = _jobs(spark)
         got = store.read(spark, t)
         assert _jobs(spark) == before, f"{t}: read ran a job"
-        segments = store._read_manifest(t)["versions"][-1]["segments"]
+        segments = store.versions(t)[-1].segments
         assert got.schema == spark.read.parquet(*segments).schema
         assert store.read_delta(spark, t, store.current_version(t)).schema == (
             spark.read.parquet(path).schema
@@ -90,3 +94,40 @@ def test_second_store_on_same_root(spark, tmp_path):
     got = first.read(spark, "t")
     assert got.schema.fieldNames() == ["w"]
     assert sorted(r["w"] for r in got.collect()) == [0.0, 1.0]
+
+
+@pytest.mark.spark
+def test_store_moves_to_a_new_root(spark, tmp_path):
+    """Manifests name version dirs relative to the table dir: a store
+    copied to a new root (the old one deleted) reads back the same rows
+    and resumes there; a manifest with the absolute entries older stores
+    wrote still reads."""
+    old_root, new_root = str(tmp_path / "a"), str(tmp_path / "moved" / "b")
+    store = SnapshotStore(old_root)
+    store.write("t", spark.range(5).withColumnRenamed("id", "x"), meta={"round": 1})
+    store.write("t", spark.range(5, 8).withColumnRenamed("id", "x"), append=True)
+    store.commit_state({"round": 1, "tables": {"t": store.current_version("t")}})
+    store.write("t", spark.range(100).withColumnRenamed("id", "x"))  # uncommitted
+    with open(store._manifest_path("t")) as f:
+        assert old_root not in f.read()
+    shutil.copytree(old_root, new_root)
+    shutil.rmtree(old_root)
+
+    moved = SnapshotStore(new_root)
+    assert moved.restore_state()["round"] == 1
+    assert sorted(r["x"] for r in moved.read(spark, "t").collect()) == list(range(8))
+    moved.write("t", spark.range(8, 10).withColumnRenamed("id", "x"), append=True)
+    assert sorted(r["x"] for r in moved.read(spark, "t").collect()) == list(range(10))
+    assert all(p.startswith(new_root) for p in moved.versions("t")[-1].segments)
+
+    # an old-style manifest: absolute path and segments
+    tdir = moved._tdir("t")
+    with open(moved._manifest_path("t")) as f:
+        m = json.load(f)
+    for e in m["versions"]:
+        e["path"] = os.path.join(tdir, e["path"])
+        e["segments"] = [os.path.join(tdir, p) for p in e["segments"]]
+    moved._commit_manifest("t", m)
+    again = SnapshotStore(new_root)
+    assert sorted(r["x"] for r in again.read(spark, "t").collect()) == list(range(10))
+    assert again.read(spark, "t", version=1).count() == 5

@@ -18,14 +18,14 @@ Per round (each step one declarative DataFrame op, shuffles noted):
   8. frontier'   = deferred ∪ out-links of fetched (anti-joined next round) ∪ retryable failures
   9. url_seen   += admitted∖retryable (bucket-keyed, bucket-sorted);
      seen filter updated INCREMENTALLY from the round delta (O(delta), not O(seen))
+ 10. atomic round commit (state.json) — kill anywhere before it and resume
+     replays the round; after it, the round is durable.
 
 The seen filter is one object picked from ``seen_mode`` at construction
 (operators/seenfilter.SeenFilter: ``bloom`` or ``cuckoo``). Every step
 calls that object — probe choice, update, delete, rebuild — and the one
 upkeep path ``_write_filters`` serves round, retract, rebucket and
 resume alike, so the two forms differ only inside their kernels.
- 10. atomic round commit (state.json) — kill anywhere before it and resume
-     replays the round; after it, the round is durable.
 
 Job economy: one aggregate job (the bucket-prune collect, which also
 fills the probed cache and fires the candidate Observation) + the five

@@ -71,9 +71,6 @@ class BloomFilter(SeenFilter):
         m = max(256, cfg.bloom_bits_per_key * headroom * n)
         return (m + 63) // 64 * 64  # whole int64 words
 
-    def blob_bytes(self, size):
-        return size // 8
-
     def bytes_per_key(self, cfg, headroom=4):
         return cfg.bloom_bits_per_key * headroom / 8
 

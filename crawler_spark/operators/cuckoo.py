@@ -170,9 +170,6 @@ class CuckooFilter(SeenFilter):
     def size_for(self, n, headroom, cfg):
         return _nb_for(n, headroom)
 
-    def blob_bytes(self, size):
-        return size * SLOTS_PER_BUCKET * 4
-
     def bytes_per_key(self, cfg, headroom=4):
         # 4-byte slots at ≤ LOAD_TARGET occupancy, and nb rounds up to a
         # power of two: up to 2× the slots the keys need

@@ -45,8 +45,8 @@ def filter_unseen(
     ~few %% of positives). Positive rows are confirmed exactly, so false
     positives never drop a URL and a filter delete never resurrects one.
     ``probe`` is the form's probe (``SeenFilter.probe_broadcast`` or
-    ``probe_cogroup``); without it ``filters`` is a Bloom table and the
-    probe is chosen by its size (:meth:`SeenFilter.probe_for`).
+    ``probe_cogroup``); without it ``filters`` is a Bloom table probed
+    cogrouped, which runs no job until the result is.
 
     ``seen`` must expose ``key_col``; candidates carrying a null key are
     dropped (unparseable URLs can never be scheduled).
@@ -57,7 +57,7 @@ def filter_unseen(
     seen_keys = seen.select(key_col)
     if filters is None:
         return cand.join(seen_keys, key_col, "left_anti")
-    probe = probe or BLOOM.probe_for(filters, cfg)
+    probe = probe or BLOOM.probe_cogroup
     probed = probe(cand, filters, key_col, cfg)
     definitely_new = probed.where(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybe = probed.where(F.col("_maybe_seen")).drop("_maybe_seen")

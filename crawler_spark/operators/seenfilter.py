@@ -88,10 +88,6 @@ class SeenFilter:
         """Capacity for ``n`` keys with ``headroom``× room to grow."""
         raise NotImplementedError
 
-    def blob_bytes(self, size: int) -> int:
-        """Serialized blob bytes at capacity ``size``."""
-        raise NotImplementedError
-
     def bytes_per_key(self, cfg: EngineConfig, headroom: int = 4) -> float:
         """Upper bound on blob bytes per key at ``headroom``."""
         raise NotImplementedError

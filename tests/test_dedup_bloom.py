@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from crawler_spark.config import EngineConfig
 from crawler_spark.operators.bloom import BLOOM
-from crawler_spark.operators.cuckoo import CUCKOO
+from crawler_spark.operators.cuckoo import CUCKOO, SLOTS_PER_BUCKET
 from crawler_spark.operators.dedup import (
     dedupe_domain_first_wins,
     filter_unseen,
@@ -131,6 +131,9 @@ def test_broadcast_probe_matches_cogroup_probe(spark):
 
 # bytes per element of each blob column: array<long> / array<int>
 BLOB_WIDTH = {"bits": 8, "slots": 4}
+# serialized blob bytes at a form's capacity: m bits / nb buckets of
+# SLOTS_PER_BUCKET 4-byte slots
+BLOB_BYTES = {"bits": lambda m: m // 8, "slots": lambda nb: nb * SLOTS_PER_BUCKET * 4}
 
 
 def test_required_buckets_keeps_blobs_bounded():
@@ -144,7 +147,7 @@ def test_required_buckets_keeps_blobs_bounded():
         for total in (0, 10**4, 10**6, 10**8, 10**10, 10**12):
             b = form.required_buckets(total, cfg)
             per_bucket = -(-total // b)
-            blob = form.blob_bytes(form.size_for(per_bucket, 4, cfg))
+            blob = BLOB_BYTES[form.blob](form.size_for(per_bucket, 4, cfg))
             assert blob <= cfg.bloom_max_blob_bytes, (form.table, total, b, blob)
             assert b % cfg.num_host_buckets == 0 and (b // cfg.num_host_buckets) & (
                 (b // cfg.num_host_buckets) - 1

@@ -23,9 +23,12 @@ Per round (each step one declarative DataFrame op, shuffles noted):
 
 The seen filter is one object picked from ``seen_mode`` at construction
 (operators/seenfilter.SeenFilter: ``bloom`` or ``cuckoo``). Every step
-calls that object — probe choice, update, delete, rebuild — and the one
-upkeep path ``_write_filters`` serves round, retract, rebucket and
-resume alike, so the two forms differ only inside their kernels.
+calls that object — probe choice, update, delete, rebuild — so the two
+forms differ only inside their kernels. The filter table's upkeep lives
+in the form too: ``SeenFilter.write`` (stamped write, size hint, rebuild
+of overflowed buckets from url_seen) serves init, round, retract,
+rebucket and resume, ``SeenFilter.refresh`` is resume's stamp check, and
+the streaming sink (streaming/ingest.py) calls the same two methods.
 
 Job economy: one aggregate job (the bucket-prune collect, which also
 fills the probed cache and fires the candidate Observation) + the five
@@ -295,45 +298,10 @@ class FrontierCrawler:
         return replace(self.cfg, num_host_buckets=self._num_buckets)
 
     def _filter_meta(self, round_no: int) -> dict:
-        return {
-            "round": round_no,
-            "hash_version": self.form.hash_version,
-            "num_buckets": self._num_buckets,
-        }
+        return {"round": round_no, "num_buckets": self._num_buckets}
 
-    def _write_filters(self, filters: DataFrame, round_no: int) -> None:
-        """Write ``filters`` as the filter table's next version — the one
-        upkeep path of round, retract, rebucket and resume. The size hint
-        (the next round's broadcast-vs-cogroup probe gate) and the count
-        of NULL-blob buckets ride the write's Observation; the hint is
-        stored only when no bucket is NULL, because such a version is
-        superseded at once: its NULL buckets are rebuilt from the exact
-        url_seen rows (4× headroom, so amortized-rare) and written again."""
-        spark, store, form = self.spark, self.store, self.form
-
-        def write(df: DataFrame) -> int:
-            obs = Observation()
-            observed = df.observe(
-                obs,
-                form.size_expr().alias("size"),
-                F.sum(F.when(F.col(form.blob).isNull(), 1).otherwise(0)).alias("overflow"),
-            )
-
-            def meta() -> dict:
-                if int(obs.get["overflow"] or 0):
-                    return self._filter_meta(round_no)
-                return {**self._filter_meta(round_no), form.size_key: int(obs.get["size"] or 0)}
-
-            store.write(form.table, observed, meta=meta)
-            return int(obs.get["overflow"] or 0)
-
-        if not write(filters):
-            return
-        written = store.read(spark, form.table)
-        overflow = [
-            r[0] for r in written.where(F.col(form.blob).isNull()).select("bucket").collect()
-        ]
-        write(form.rebuild(written, store.read(spark, "url_seen"), overflow, cfg=self._rcfg()))
+    def _read_seen(self) -> DataFrame:
+        return self.store.read(self.spark, "url_seen")
 
     def _canonical_frontier(self, urls: DataFrame, depth_col, priority_col) -> DataFrame:
         """urls(url[, ...]) → frontier rows with canonical keys. When a
@@ -398,9 +366,9 @@ class FrontierCrawler:
         empty_seen = self.spark.createDataFrame([], SEEN_SCHEMA)
         fv = self.store.write("frontier", frontier, meta={"round": 0})
         self.store.write("url_seen", empty_seen, meta={"round": 0})
-        self.store.write(
-            self.form.table, self.form.build(empty_seen, cfg=self._rcfg()),
-            meta=self._filter_meta(0),
+        self.form.write(
+            self.store, self.form.build(empty_seen, cfg=self._rcfg()),
+            self._filter_meta(0), self._read_seen, cfg=self._rcfg(),
         )
         self.store.commit_state(
             {
@@ -437,7 +405,7 @@ class FrontierCrawler:
         self._num_buckets = int(state.get("num_buckets", self.cfg.num_host_buckets))
         self._seen_total = int(state.get("seen_total", -1))
         if self._seen_total < 0:  # pre-tracking store: one count at resume
-            self._seen_total = self.store.read(self.spark, "url_seen").count()
+            self._seen_total = self._read_seen().count()
         # a store written in the other seen_mode has no blobs under this
         # mode's table — fail fast instead of probing a missing table
         mode_written = state.get("seen_mode", "bloom")
@@ -449,16 +417,12 @@ class FrontierCrawler:
         # Filter blobs from a different hash/slot scheme would yield
         # false NEGATIVES on probe (silent url_seen breakage) — rebuild
         # from the exact seen table on any stamp mismatch.
-        ftable = self.form.table
-        meta = self.store.meta(ftable)
-        if meta.get("hash_version") != self.form.hash_version or (
-            meta.get("num_buckets") not in (None, self._num_buckets)
-        ):
-            seen = self.store.read(self.spark, "url_seen")
-            self._write_filters(
-                self.form.build(seen, cfg=self._rcfg(), headroom=4), int(state["round"])
-            )
-            state["tables"][ftable] = self.store.current_version(ftable)
+        v = self.form.refresh(
+            self.store, self._filter_meta(int(state["round"])), self._read_seen,
+            cfg=self._rcfg(),
+        )
+        if v is not None:
+            state["tables"][self.form.table] = v
             self.store.commit_state(state)
         return int(state["round"])
 
@@ -519,11 +483,12 @@ class FrontierCrawler:
             meta={"round": rnd, "retracted": n},
         )
         filters = store.read(spark, self.form.table)
-        self._write_filters(
+        self.form.write(
+            store,
             self.form.delete(
                 filters, present.select("surt"), cfg=self._rcfg(), seen=remaining
             ),
-            rnd,
+            self._filter_meta(rnd), self._read_seen, cfg=self._rcfg(),
         )
         present.unpersist()
         # a fresh (un-resumed) crawler object tracks 0 — trust the state
@@ -775,7 +740,10 @@ class FrontierCrawler:
             # crawl_recrawl benchmark, the concurrent filter job gained
             # about 5% throughput but raised the rounds and retractions
             # whose process-tree RSS peaked past 3.7 GB from 3 to 10 in 24.
-            self._write_filters(self.form.update(filters, seen_delta, cfg=rcfg), round_no)
+            self.form.write(
+                store, self.form.update(filters, seen_delta, cfg=rcfg),
+                self._filter_meta(round_no), self._read_seen, cfg=rcfg,
+            )
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -834,16 +802,16 @@ class FrontierCrawler:
             self._num_buckets = need_b
             rcfg2 = self._rcfg()
             rebucketed = (
-                store.read(spark, "url_seen")
+                self._read_seen()
                 .withColumn("bucket", bucket_of("surt", rcfg2))
                 .sortWithinPartitions("bucket")
             )
             store.write(
                 "url_seen", rebucketed, meta={"round": round_no, "rebucketed_to": need_b}
             )
-            self._write_filters(
-                self.form.build(store.read(spark, "url_seen"), cfg=rcfg2, headroom=4),
-                round_no,
+            self.form.write(
+                store, self.form.build(self._read_seen(), cfg=rcfg2, headroom=4),
+                self._filter_meta(round_no), self._read_seen, cfg=rcfg2,
             )
 
         if self.adaptive:

@@ -70,6 +70,7 @@ class UnseenResult:
     unseen: DataFrame  # exact; carries a ``bucket`` column
     probed: DataFrame  # cached — caller unpersists after the round
     maybe_buckets: list[int]  # buckets with ≥1 Bloom positive
+    maybe_rows: int  # probe-positive rows, i.e. the exact confirm join's input
 
 
 def filter_unseen_pruned(
@@ -103,7 +104,8 @@ def filter_unseen_pruned(
     pruning analog. At a 10^10-row seen table this is what keeps the
     confirm join from shuffling the whole table when only a few buckets
     have positives (early rounds: most candidates are probe-negative and
-    skip the join entirely).
+    skip the join entirely). The bucket ids come from one collect of
+    per-bucket positive counts, whose sum is ``maybe_rows``.
 
     ``probed`` is cached here because BOTH output branches (definitely-new
     ∪ confirmed-new) read it — without the cache the candidate subtree
@@ -114,10 +116,9 @@ def filter_unseen_pruned(
     if probe is None:
         probe = BLOOM.probe_for(blooms, cfg, total_bits)
     probed = probe(cand, blooms, key_col, cfg, bucket_out="bucket").persist()
-    maybe_buckets = [
-        r[0]
-        for r in probed.where(F.col("_maybe_seen")).select("bucket").distinct().collect()
-    ]
+    # one job: the ≤ B positive buckets with their row counts
+    per_bucket = probed.where(F.col("_maybe_seen")).groupBy("bucket").count().collect()
+    maybe_buckets = [r["bucket"] for r in per_bucket]
     definitely_new = probed.where(~F.col("_maybe_seen")).drop("_maybe_seen")
     if maybe_buckets:
         seen_keys = seen.select("bucket", key_col).where(
@@ -131,7 +132,10 @@ def filter_unseen_pruned(
         unseen = definitely_new.unionByName(confirmed_new)
     else:
         unseen = definitely_new
-    return UnseenResult(unseen=unseen, probed=probed, maybe_buckets=maybe_buckets)
+    return UnseenResult(
+        unseen=unseen, probed=probed, maybe_buckets=maybe_buckets,
+        maybe_rows=sum(r["count"] for r in per_bucket),
+    )
 
 
 def dedupe_domain_first_wins(results: DataFrame, order: list[Column]) -> DataFrame:

@@ -960,10 +960,12 @@ def _salsa_side(
 ) -> DataFrame:
     """One side of SALSA: ``deg`` = (node, deg) for the hub (parity 0)
     or authority (parity 1) side; ``comp`` = bipartite components.
-    Returns (node, out_col) with the closed-form ppb score."""
+    Returns (node, out_col) with the closed-form ppb score. The decode
+    uses pmod and (node − parity) div 2, exact for negative ids too
+    (``%`` and ``div`` truncate toward zero: -1 % 2 = -1)."""
     side = deg.join(
-        comp.where(F.col("node") % 2 == parity).select(
-            F.expr("node div 2").alias("node"), "component"
+        comp.where(F.pmod(F.col("node"), F.lit(2)) == parity).select(
+            F.expr(f"(node - {parity}) div 2").alias("node"), "component"
         ),
         "node",
     )

@@ -20,7 +20,10 @@ bucket built with headroom, untouched bucket passed through, bucket over
 capacity emitted with a NULL blob), the JVM broadcast probe and the
 cogrouped probe (unknown bucket ⇒ False, NULL blob ⇒ True), the rebuild
 of chosen buckets from the exact rows, the size hint and the choice
-between the two probes. A form (:mod:`crawler_spark.operators.bloom`,
+between the two probes, and the filter table's upkeep: the stamped
+write that rebuilds overflowed buckets (:meth:`SeenFilter.write`) and
+the stamp check (:meth:`SeenFilter.refresh`), shared by the frontier
+and the streaming sink. A form (:mod:`crawler_spark.operators.bloom`,
 :mod:`crawler_spark.operators.cuckoo`) supplies only its sizing, its
 numpy build/insert/contains kernels, the JVM ``contains`` expression,
 its delete, and its table name, blob column, scheme stamp and size-hint
@@ -38,10 +41,11 @@ from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from crawler_spark.config import DEFAULT, EngineConfig
+from crawler_spark.sources.tables import SnapshotStore
 
 
 def _hash_cols(df: DataFrame, key_col: str, num_buckets: int) -> DataFrame:
@@ -334,6 +338,74 @@ class SeenFilter:
             .applyInPandas(per_bucket, out_schema)
         )
         return _probe_output(probed, candidates.columns, out_col, bucket_out)
+
+    # ----------------------------------------------------------- upkeep --
+    def write(
+        self,
+        store: SnapshotStore,
+        filters: DataFrame,
+        meta: dict,
+        read_seen: Callable[[], DataFrame],
+        key_col: str = "surt",
+        cfg: EngineConfig = DEFAULT,
+    ) -> int:
+        """Write ``filters`` as the filter table's next version, stamped
+        with ``meta`` and this form's ``hash_version``; returns the version
+        that is current afterwards. The size hint (the next probe's
+        broadcast-vs-cogroup gate, :meth:`probe_for`) and the count of
+        NULL-blob buckets ride the write's Observation. The hint is stored
+        only when no bucket is NULL, because such a version is superseded
+        at once: its NULL buckets are rebuilt from the exact seen rows,
+        ``read_seen()`` (called only then; 4× headroom, so amortized-rare),
+        and written again. A NULL blob therefore never outlives the write
+        that produced it."""
+        meta = {**meta, "hash_version": self.hash_version}
+
+        def put(df: DataFrame) -> tuple[int, int]:
+            obs = Observation()
+            observed = df.observe(
+                obs,
+                self.size_expr().alias("size"),
+                F.sum(F.when(F.col(self.blob).isNull(), 1).otherwise(0)).alias("overflow"),
+            )
+
+            def stamp() -> dict:
+                if int(obs.get["overflow"] or 0):
+                    return meta
+                return {**meta, self.size_key: int(obs.get["size"] or 0)}
+
+            v = store.write(self.table, observed, meta=stamp)
+            return v, int(obs.get["overflow"] or 0)
+
+        v, overflow = put(filters)
+        if not overflow:
+            return v
+        written = store.read(filters.sparkSession, self.table)
+        buckets = [
+            r[0] for r in written.where(F.col(self.blob).isNull()).select("bucket").collect()
+        ]
+        return put(self.rebuild(written, read_seen(), buckets, key_col, cfg))[0]
+
+    def refresh(
+        self,
+        store: SnapshotStore,
+        meta: dict,
+        read_seen: Callable[[], DataFrame],
+        key_col: str = "surt",
+        cfg: EngineConfig = DEFAULT,
+    ) -> int | None:
+        """The stamp check before probing a stored filter table: blobs of
+        another hash scheme (a different or missing ``hash_version``) or
+        bucket count would give false NEGATIVES, so the whole table is
+        rebuilt from the exact seen rows and written with :meth:`write`.
+        Returns that version, or None when the stamp holds."""
+        stamp = store.meta(self.table)
+        if stamp.get("hash_version") == self.hash_version and (
+            stamp.get("num_buckets") in (None, cfg.num_host_buckets)
+        ):
+            return None
+        built = self.build(read_seen(), key_col, cfg, headroom=4)
+        return self.write(store, built, meta, read_seen, key_col, cfg)
 
     def probe_for(self, filters: DataFrame, cfg: EngineConfig = DEFAULT, hint: int | None = None):
         """The probe for this filter set: broadcast while it fits

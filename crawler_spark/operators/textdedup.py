@@ -390,6 +390,12 @@ def containment_pairs(
     portable). relation: 'near_dup' (both sides clear), 'a_in_b',
     'b_in_a'.
 
+    ``shingles``: an optional precomputed posting list
+    (:func:`distinct_shingles` output). The caller must persist it:
+    it feeds three consumers (candidate generation, the semi-join and the
+    size aggregate), and an unpersisted frame recomputes its explode +
+    distinct for each. Only a list built here is persisted here.
+
     Scale shape: candidates come from the banded LSH index (linear
     scan, hot buckets capped), and the exact intersection join runs
     ONLY over posting lists semi-joined down to docs that appear in

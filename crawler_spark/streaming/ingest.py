@@ -27,15 +27,21 @@ Exactly-once design (per-batch work bounded, NOT O(total emitted)):
   mode=overwrite — a checkpoint replay of the same batch overwrites the
   same directory, so a crash between the output write and the state
   commit can never duplicate output rows;
-- cross-batch dedupe state is a compact (warc_source, url, bucket) key
-  table + per-bucket Bloom sidecars in a SnapshotStore next to the
-  output. Batch results are Bloom-probed JVM-side (broadcast, bounded
-  blob bytes); definitely-new rows skip the seen table entirely, and
-  only Bloom-positive rows run the exact confirm anti-join, against just
-  their buckets (partition-pruned). The previous design re-read and
-  distinct-ed the ENTIRE output per micro-batch — O(total emitted
-  so far) work per batch, forever growing; this one reads O(bloom
-  bytes + candidate buckets);
+- cross-batch dedupe state is a (warc_source, url, bucket) key table
+  ``seen`` plus per-bucket Bloom blobs in a SnapshotStore next to the
+  output. Each batch goes through the frontier's unseen stage,
+  ``dedup.filter_unseen_pruned``, keyed on ``warc_source \x00 url``
+  (derived on read): the Bloom probe (broadcast or cogrouped, gated by
+  the stored size hint), then the exact confirm anti-join for probe
+  positives only, against just their buckets of ``seen`` — O(bloom
+  bytes + candidate buckets) per batch, not O(total emitted);
+- the blobs' upkeep is the frontier's too: ``SeenFilter.write`` folds in
+  each batch's keys, stamps the version and rebuilds any overflowed
+  bucket from ``seen`` (a bucket never stays all-maybe), and at batch
+  start ``SeenFilter.refresh`` rebuilds the blobs when the stamp is stale
+  or missing (blobs of an old hash scheme give false negatives). The
+  bucket count is pinned in the committed state: ``seen`` stores bucket
+  ids;
 - all state tables commit atomically per batch (SnapshotStore
   commit_state); a replayed already-committed batch is detected by its
   batch_id and skipped, and a half-written batch is rolled back by
@@ -45,29 +51,29 @@ Exactly-once design (per-batch work bounded, NOT O(total emitted)):
   only valid for the stream that wrote the state: state.json records the
   checkpoint's query id (``<checkpoint>/metadata``) and a mismatch fails
   fast instead of silently dropping a fresh checkpoint's first batches;
-- a crash BEFORE the very first commit_state leaves orphaned seen/blooms
+- a crash BEFORE the very first commit_state leaves orphaned state
   tables with no state.json; replaying batch 0 against them would make
-  its own keys probe as already-seen (silent loss), so the sink resets
-  orphaned tables when no committed state exists;
-- history metrics ride the batch's own jobs: confirm rows fold into the
-  bounded bucket-pruning aggregation, emitted rows ride the seen-table
-  write as an ``Observation`` — no standalone count jobs per batch.
+  its own keys probe as already-seen (silent loss), so the sink drops
+  them when no committed state exists;
+- metrics go to the ``history`` table, one row per batch appended
+  driver-side and rolled back with the other tables (state.json does not
+  grow). They ride the batch's own jobs: confirm rows/buckets come from
+  the bucket-prune collect, emitted rows from an ``Observation`` on the
+  seen write — no standalone count jobs.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from dataclasses import replace
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from crawler_spark.config import DEFAULT, EngineConfig
-from crawler_spark.operators.bloom import (
-    BLOOM_SCHEMA,
-    probe_blooms_broadcast,
-    update_blooms,
-)
+from crawler_spark.operators.bloom import BLOOM
+from crawler_spark.operators.dedup import filter_unseen_pruned
 from crawler_spark.operators.seenfilter import bucket_of
 from crawler_spark.plans.flagship import classify_bulk
 from crawler_spark.sources.corpus import PAGES_SCHEMA
@@ -81,6 +87,9 @@ def read_pages_stream(
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return r.parquet(src_dir)
+
+
+HISTORY_SCHEMA = "batch_id long, emitted long, confirm_rows long, confirm_buckets long"
 
 
 def _key_col():
@@ -123,10 +132,10 @@ def stream_classify(
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         state = store.restore_state()
         if state is None:
-            # No committed state: any existing seen/blooms tables are
-            # orphans of a crash before the first commit_state — replaying
-            # batch 0 against them would suppress its own keys. Reset.
-            for t in ("seen", "blooms"):
+            # No committed state: any existing state tables are orphans of
+            # a crash before the first commit_state — replaying batch 0
+            # against them would suppress its own keys. Reset.
+            for t in ("seen", BLOOM.table, "history"):
                 if store.exists(t):
                     store.drop(t)
             state = {}
@@ -142,41 +151,30 @@ def stream_classify(
             )
         if state.get("last_batch_id", -1) >= batch_id:
             return  # replay of a batch this stream fully committed → no-op
+        # seen rows carry bucket ids: keep the count they were written with
+        bcfg = replace(cfg, num_host_buckets=state.get("num_buckets", cfg.num_host_buckets))
+        meta = {"batch_id": batch_id, "num_buckets": bcfg.num_host_buckets}
+
+        def read_seen() -> DataFrame:
+            return store.read(spark, "seen").withColumn("_k", _key_col())
 
         res = classify_bulk(batch_df, min_confidence=min_confidence).localCheckpoint()
-
-        confirm_rows = 0
-        confirm_buckets: list[int] = []
+        ur, confirm = None, (0, 0)
         if store.exists("seen"):
-            blooms = store.read(spark, "blooms")
-            probed = probe_blooms_broadcast(
-                res.withColumn("_k", _key_col()), blooms, key_col="_k", cfg=cfg,
-                bucket_out="_bkt",
-            ).localCheckpoint()
-            fresh = probed.where(~F.col("_maybe_seen"))
-            maybe = probed.where(F.col("_maybe_seen"))
-            # exact confirm for Bloom positives only, pruned to their
-            # buckets; bucket ids AND the confirm-rows metric come out of
-            # this one bounded aggregation job (collects ≤
-            # num_host_buckets rows) — no standalone count job
-            bucket_rows = (
-                maybe.groupBy("_bkt").agg(F.count(F.lit(1)).alias("n")).collect()
+            BLOOM.refresh(store, meta, read_seen, "_k", bcfg)
+            ur = filter_unseen_pruned(
+                res.withColumn("_k", _key_col()), read_seen(),
+                store.read(spark, BLOOM.table), key_col="_k", cfg=bcfg,
+                total_bits=store.meta(BLOOM.table).get(BLOOM.size_key),
             )
-            confirm_buckets = [r["_bkt"] for r in bucket_rows]
-            confirm_rows = int(sum(r["n"] for r in bucket_rows))
-            if confirm_buckets:
-                seen = store.read(spark, "seen").where(
-                    F.col("bucket").isin(confirm_buckets)
-                )
-                maybe = maybe.join(seen, ["warc_source", "url"], "left_anti")
-                res = fresh.unionByName(maybe)
-            else:
-                res = fresh
-            res = res.drop("_k", "_maybe_seen", "_bkt")
+            res = ur.unseen.drop("_k", "bucket")
+            confirm = (ur.maybe_rows, len(ur.maybe_buckets))
 
         # idempotent delta write: a replay overwrites the same directory
         batch_dir = f"{out_dir}/batch={batch_id}"
         res.write.mode("overwrite").parquet(batch_dir)
+        if ur is not None:
+            ur.probed.unpersist()
 
         # fold the committed delta's keys into seen + blooms, then commit
         # all tables atomically; a crash before commit_state rolls back
@@ -185,7 +183,7 @@ def stream_classify(
             spark.read.parquet(batch_dir)
             .select("warc_source", "url")
             .withColumn("_k", _key_col())
-            .withColumn("bucket", bucket_of("_k", cfg))
+            .withColumn("bucket", bucket_of("_k", bcfg))
             .observe(obs_emit, F.count(F.lit(1)).alias("emitted"))
         )
         seen_v = store.write(
@@ -193,29 +191,21 @@ def stream_classify(
         )
         # the seen write is the action the metric rides on
         emitted = int(obs_emit.get["emitted"])
-        prev_blooms = (
-            store.read(spark, "blooms")
-            if store.exists("blooms")
-            else spark.createDataFrame([], BLOOM_SCHEMA)
-        )
-        blooms_v = store.write(
-            "blooms", update_blooms(prev_blooms, new_keys, key_col="_k", cfg=cfg)
-        )
-        history = state.get("history", [])
-        history.append(
-            {
-                "batch_id": batch_id,
-                "emitted": emitted,
-                "confirm_rows": confirm_rows,
-                "confirm_buckets": len(confirm_buckets),
-            }
+        if ur is None:  # first batch: no filter table yet
+            blooms = BLOOM.build(new_keys, "_k", bcfg, headroom=4)
+        else:
+            blooms = BLOOM.update(store.read(spark, BLOOM.table), new_keys, "_k", bcfg)
+        blooms_v = BLOOM.write(store, blooms, meta, read_seen, "_k", bcfg)
+        history_v = store.write_local(
+            "history", [(batch_id, emitted, *confirm)], HISTORY_SCHEMA,
+            meta={"batch_id": batch_id}, append=True,
         )
         store.commit_state(
             {
                 "last_batch_id": batch_id,
                 "stream_id": sid if sid is not None else state_sid,
-                "tables": {"seen": seen_v, "blooms": blooms_v},
-                "history": history,
+                "num_buckets": bcfg.num_host_buckets,
+                "tables": {"seen": seen_v, BLOOM.table: blooms_v, "history": history_v},
             }
         )
 

@@ -139,3 +139,26 @@ def test_salsa_matches_twin_on_random_graphs(spark):
     }
     for v in range(n):
         assert got[v] == (auth[v], hub[v]), v
+
+
+def test_salsa_is_invariant_under_negative_id_shift(spark):
+    """Shifting every id by -k (half the ids become negative) must give
+    each node the same scores: the bipartite decode has to place odd
+    negative codes (authority -1 encodes to -1) on the authority side."""
+    n, k = 60, 30
+    docs = spark.range(n).selectExpr("id AS doc_id")
+    edges = synth_link_graph(docs, n)
+    base = {
+        r["doc_id"]: (r["salsa_auth_ppb"], r["salsa_hub_ppb"])
+        for r in salsa(edges, docs.selectExpr("doc_id AS node")).collect()
+    }
+    shifted = salsa(
+        edges.selectExpr(f"src - {k} AS src", f"dst - {k} AS dst"),
+        docs.selectExpr(f"doc_id - {k} AS node"),
+    )
+    got = {
+        r["doc_id"] + k: (r["salsa_auth_ppb"], r["salsa_hub_ppb"])
+        for r in shifted.collect()
+    }
+    assert any(a for a, _ in base.values()) and any(h for _, h in base.values())
+    assert got == base

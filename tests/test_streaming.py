@@ -3,14 +3,26 @@ flagship run; event-time windowed counts with watermark."""
 
 from __future__ import annotations
 
+import os
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
 
+from crawler_spark.config import DEFAULT
+from crawler_spark.operators.bloom import BLOOM
 from crawler_spark.plans.flagship import classify_bulk
 from crawler_spark.sources.corpus import generate_pages
+from crawler_spark.sources.tables import SnapshotStore
 from crawler_spark.streaming.ingest import stream_classify, stream_confidence_counts
 
 N = 3000
+
+
+def _history(spark, out):
+    """The sink's per-batch metrics rows, in batch order."""
+    rows = SnapshotStore(out + "_state").read(spark, "history").orderBy("batch_id")
+    return [r.asDict() for r in rows.collect()]
 
 
 @pytest.fixture(scope="module")
@@ -95,24 +107,26 @@ def test_cross_batch_state_is_bounded_and_exact(spark, tmp_path):
     unique batches confirm ~nothing against the seen table (bloom-negative
     fast path), duplicate re-arrivals are suppressed via the confirm join,
     and a replayed committed batch is a no-op."""
-    import json
-
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     pages = generate_pages(spark, 2000, partitions=2).cache()
     w0 = pages.where(F.col("warc_offset") < 1000)
     w1 = pages.where(F.col("warc_offset") >= 1000)
+    state_json = f"{out}_state/state.json"
 
     w0.write.parquet(f"{src}/wave=0")
     stream_classify(spark, f"{src}/wave=*", out, ckpt).awaitTermination(300)
+    state_bytes_0 = os.path.getsize(state_json)
     w1.write.parquet(f"{src}/wave=1")
     stream_classify(spark, f"{src}/wave=*", out, ckpt).awaitTermination(300)
     # wave 2 re-delivers wave 0's rows in new files → all duplicates
     w0.write.parquet(f"{src}/wave=2")
     stream_classify(spark, f"{src}/wave=*", out, ckpt).awaitTermination(300)
+    # the per-batch metrics live in their own table, not in state.json
+    assert os.path.getsize(state_json) == state_bytes_0
 
-    hist = json.load(open(f"{out}_state/state.json"))["history"]
+    hist = _history(spark, out)
     assert [h["batch_id"] for h in hist] == [0, 1, 2]
     # batch 1 is all-new: the exact confirm join saw at most bloom-FP rows
     assert hist[1]["confirm_rows"] <= max(3, hist[1]["emitted"] // 20)
@@ -199,11 +213,76 @@ def test_sink_runs_no_standalone_count_jobs(spark, tmp_path, monkeypatch):
 
     assert n_during == 0
     # and the metrics still got recorded correctly
-    import json
-
-    hist = json.load(open(f"{out}_state/state.json"))["history"]
+    hist = _history(spark, out)
     assert hist[0]["emitted"] > 0 and hist[1]["emitted"] == 0
     assert hist[1]["confirm_rows"] > 0
+
+
+@pytest.mark.spark
+def test_overflowed_bloom_bucket_is_rebuilt(spark, tmp_path):
+    """One bucket, three waves whose emitted key counts grow more than 4×
+    each time: every wave overflows the bucket's Bloom filter (built with
+    4× headroom). The sink must rebuild it from the exact seen rows in the
+    same batch; a NULL blob would probe all-maybe for the rest of the
+    stream and send every later key through the exact confirm join."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    cfg = replace(DEFAULT, num_host_buckets=1)
+    pages = generate_pages(spark, 3560, partitions=2).cache()
+    store = SnapshotStore(out + "_state")
+    for i, (lo, hi) in enumerate([(0, 80), (80, 560), (560, 3560)]):
+        wave = pages.where((F.col("warc_offset") >= lo) & (F.col("warc_offset") < hi))
+        wave.write.parquet(f"{src}/wave={i}")
+        stream_classify(spark, f"{src}/wave=*", out, ckpt, cfg=cfg).awaitTermination(300)
+        assert store.read(spark, BLOOM.table).where(F.col("bits").isNull()).count() == 0
+
+    emitted = [h["emitted"] for h in _history(spark, out)]
+    assert emitted[1] > 4 * emitted[0] > 0 and emitted[2] > 4 * emitted[1]
+    res = spark.read.parquet(out)
+    assert res.count() == res.select("warc_source", "url").distinct().count()
+    got = {(r["warc_source"], r["url"]) for r in res.collect()}
+    expect = {
+        (r["warc_source"], r["url"])
+        for r in classify_bulk(pages, min_confidence="medium").collect()
+    }
+    assert got == expect
+    pages.unpersist()
+
+
+@pytest.mark.spark
+def test_stale_filter_stamp_is_rebuilt_before_probe(spark, tmp_path):
+    """Blobs stamped with another hash scheme must not be probed: a
+    Bloom table whose stamp is stale is rebuilt from the exact seen rows
+    at batch start. Here the stale version's bits are all zero, so
+    probing it would call every duplicate definitely new. A restart with
+    another bucket count keeps the committed one, because the seen rows
+    store bucket ids."""
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    pages = generate_pages(spark, 500, partitions=2)
+    pages.write.parquet(f"{src}/wave=0")
+    stream_classify(spark, f"{src}/wave=*", out, ckpt).awaitTermination(300)
+    assert spark.read.parquet(f"{out}/batch=0").count() > 0
+
+    store = SnapshotStore(out + "_state")
+    zeroed = store.read(spark, BLOOM.table).withColumn(
+        "bits", F.transform("bits", lambda w: F.lit(0).cast("long"))
+    )
+    v = store.write(
+        BLOOM.table, zeroed,
+        meta={**store.meta(BLOOM.table), "hash_version": BLOOM.hash_version - 1},
+    )
+    state = store.read_state()
+    state["tables"][BLOOM.table] = v
+    store.commit_state(state)
+
+    pages.write.parquet(f"{src}/wave=1")  # every row a duplicate
+    stream_classify(spark, f"{src}/wave=*", out, ckpt).awaitTermination(300)
+    assert spark.read.parquet(f"{out}/batch=1").count() == 0
+    assert store.meta(BLOOM.table)["hash_version"] == BLOOM.hash_version
+
+    pages.write.parquet(f"{src}/wave=2")
+    cfg = replace(DEFAULT, num_host_buckets=8)
+    stream_classify(spark, f"{src}/wave=*", out, ckpt, cfg=cfg).awaitTermination(300)
+    assert spark.read.parquet(f"{out}/batch=2").count() == 0
 
 
 @pytest.mark.spark

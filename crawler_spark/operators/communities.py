@@ -31,7 +31,7 @@ Scale shape (the 100 TB story):
   neighbor key, groupBy (node, label) count, then a per-node argmax
   via one max(struct(cnt, -label)) aggregate — no window, no sort;
 - lineage is truncated per round with localCheckpoint, like the
-  pagerank loop (linkgraph.py:99-116);
+  rank-mass kernel ``_propagate`` in linkgraph.py;
 - the label-join key is the neighbor id: hub pages (high in-degree)
   are hot keys, the same skew the pagerank contribution join carries —
   AQE skew-join splits them at runtime, and LPA_ITERATIONS is a small
@@ -106,14 +106,9 @@ def communities_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: majority-label communities of the arithmetic link
     graph over documents (same synthetic graph as pagerank/HITS — one
     bounded node-count scalar)."""
-    from crawler_spark.operators.linkgraph import synth_link_graph
+    from crawler_spark.operators.linkgraph import _doc_graph, _empty
 
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     if n == 0:
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(0).cast("long").alias("community"),
-            F.lit(0).cast("long").alias("csize"),
-        )
-    return label_propagation(synth_link_graph(docs, n), nodes)
+        return _empty(docs, "doc_id long, community long, csize long")
+    return label_propagation(edges, nodes)

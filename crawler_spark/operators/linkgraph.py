@@ -1,20 +1,39 @@
-"""Link-graph PageRank for crawl-frontier prioritization.
+"""The crawl link-graph tier: importance, trust, reach and structure.
 
 The reference crawler schedules breadth-first with per-host politeness
 (SURVEY §2.8/§2.9; src/crawler.py:205-242) — every admitted URL has the
-same priority. Production crawlers order the frontier by link-graph
-importance (PageRank / OPIC: Abiteboul, Preda, Cobena, "Adaptive
-on-line page importance computation", WWW 2003; Page, Brin, Motwani,
-Winograd, "The PageRank citation ranking", 1999 — both public). This
-module adds that tier: a distributed fixed-point PageRank over the
-crawl's link graph whose score becomes the frontier priority column.
+same priority, and so does this package's frontier, which orders by
+seed order and BFS depth (frontier.py). Production crawlers also rank
+pages by link-graph importance (Page, Brin, Motwani, Winograd, "The
+PageRank citation ranking", 1999; Abiteboul, Preda, Cobena, "Adaptive
+on-line page importance computation", WWW 2003 — both public). This
+module computes those signals over the crawl's link graph as queries;
+none of them is wired into the frontier's ``priority`` column.
+
+The operators, each paired with a ``*_over_documents`` driver query over
+the arithmetic graph :func:`synth_link_graph` builds (:func:`_doc_graph`):
+- rank mass: :func:`pagerank`, :func:`trustrank`, :func:`opic`, and
+  :func:`spam_mass` composed from the first two;
+- hubs and authorities: :func:`hits`, closed-form :func:`salsa`;
+- reach: :func:`hyperanf` (neighborhood function) and
+  :func:`harmonic_centrality`;
+- structure: :func:`bowtie_regions`, :func:`triangle_counts`,
+  :func:`degree_histogram`, :func:`host_link_summary`.
+
+Two kernels carry the iterative operators:
+- :func:`_propagate` — one mass-propagation step repeated: every node
+  splits a mass column evenly over its out-links, and the caller's
+  column expressions turn the summed inflow into the next state.
+  PageRank, TrustRank and OPIC differ only in those expressions.
+- :func:`_hll_balls` — per-node HyperLogLog balls grown one hop per
+  round; hyperanf sums them, harmonic centrality folds their deltas.
 
 Determinism contract (what makes this DuckDB-oracle-able): ranks are
 held as **integer parts-per-billion** of total mass and every update is
 integer arithmetic —
 
-    contrib(e)  = rank(src) div out_deg(src)
-    rank'(v)    = base + (DAMP_NUM * sum(contrib)) div DAMP_DEN
+    s(v)        = Σ_{u→v} rank(u) div out_deg(u)
+    rank'(v)    = base + (DAMP_NUM * s(v)) div DAMP_DEN
     base        = ((SCALE div n) * (DEN-NUM)) div DEN
 
 Integer sums are exact and order-independent, so the result is
@@ -24,11 +43,13 @@ Dangling mass (nodes with no out-links) is dropped, not redistributed;
 documented deviation from the 1999 paper, shared by the oracle.
 
 Scale shape (10^10-edge graph):
-- out-degree and the contribution join both shuffle on ``src``; the
-  per-iteration plan is join → partial-agg groupBy(dst) — no windows,
-  no Python. On a real cluster, bucket ``edges`` by ``src`` once
-  (DISTRIBUTE BY) so every iteration's join is co-partitioned and only
-  the rank table (n rows, 2 cols) moves.
+- the edge list is cast and checkpointed once per operator
+  (:func:`_edge_list`); :func:`_propagate` joins it with the
+  out-degrees once, so each iteration is one src-keyed join of that
+  static table with the state, then a partial-agg groupBy(dst) — no
+  windows, no Python. On a real cluster, bucket ``edges`` by ``src``
+  once (DISTRIBUTE BY) so every iteration's join is co-partitioned and
+  only the state table (n rows) moves.
 - lineage is truncated per iteration with localCheckpoint (same
   discipline as operators/components.py — Catalyst re-analysis of a
   T-deep iterative plan is superlinear); swap for reliable checkpoint
@@ -87,6 +108,103 @@ def synth_link_graph(docs: DataFrame, n_docs: int) -> DataFrame:
     return e.where(F.col("src") != F.col("dst")).distinct()
 
 
+def _edge_list(edges: DataFrame, reverse: bool = False) -> DataFrame:
+    """(src, dst) longs from the first two columns of ``edges`` (swapped
+    when ``reverse``), checkpointed once: the operators that call this
+    read their edge list more than once (per round, or per direction)."""
+    src, dst = F.col(edges.columns[0]), F.col(edges.columns[1])
+    if reverse:
+        src, dst = dst, src
+    return edges.select(
+        src.cast("long").alias("src"), dst.cast("long").alias("dst")
+    ).localCheckpoint()
+
+
+def _doc_graph(docs: DataFrame) -> tuple[int, DataFrame, DataFrame]:
+    """(n, nodes, edges) of a driver query: the document count (one
+    bounded driver scalar), the ``node`` list and the arithmetic link
+    graph over ``docs``."""
+    n = docs.count()
+    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    return n, nodes, synth_link_graph(docs, n)
+
+
+def _empty(docs: DataFrame, ddl: str) -> DataFrame:
+    """Zero-row result typed by ``ddl``: a driver query over an empty
+    slice returns this instead of dividing by a zero node count."""
+    return docs.sparkSession.createDataFrame([], ddl)
+
+
+def _propagate(
+    e: DataFrame, state: DataFrame, mass: str, new_cols: list, iterations: int
+) -> tuple[DataFrame, DataFrame]:
+    """The rank-mass kernel of pagerank, trustrank and opic: returns
+    (state, src_deg) after ``iterations`` steps, src_deg = (src, out_deg).
+
+    ``e`` is an :func:`_edge_list`; ``state`` has a ``node`` row for
+    every vertex and a ``mass`` column. Each step sums the inflow
+    s(v) = Σ_{u→v} mass(u) div out_deg(u), 0 where nothing flows in,
+    then replaces the state with ``node`` plus ``new_cols`` — column
+    expressions over the old state and ``s``.
+
+    The static ``e ⋈ src_deg`` join is checkpointed once, so a step is
+    one src-keyed join with the state plus a partial-agg groupBy(dst),
+    and the state is checkpointed per step. ``src_deg`` itself stays a
+    plan over ``e``: the one job that checkpoints the join computes it."""
+    src_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
+    ed = e.join(src_deg, "src").localCheckpoint()
+    state = state.localCheckpoint()
+    for _ in range(iterations):
+        inflow = (
+            ed.join(state.select(F.col("node").alias("src"), mass), "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.expr(f"{mass} div out_deg")).alias("s"))
+        )
+        state = (
+            state.join(inflow, "node", "left")
+            .withColumn("s", F.coalesce("s", F.lit(0).cast("long")))
+            .select("node", *new_cols)
+            .localCheckpoint()
+        )
+    return state, src_deg
+
+
+def _hll_balls(e: DataFrame, nodes: DataFrame, rounds: int) -> DataFrame:
+    """(grp, t, est) for t = 0..rounds: the portable-HLL estimate of
+    |B_t(v)|, the nodes within t hops of v along ``e`` (an
+    :func:`_edge_list`), for every ``node`` v.
+
+    B_t(v) = B_{t-1}(v) ∪ ⋃_{v→w} B_{t-1}(w) is, on register tables,
+    ONE equi-join + ONE max partial-agg per round, lineage truncated
+    per round. The join fans out |E|·m rows per round — the documented
+    HyperANF cost — and the max-merge collapses it map-side before the
+    shuffle."""
+    from crawler_spark.operators.hll import hll_estimate, hll_registers
+
+    keyed = nodes.select(
+        F.col("node").cast("long").alias("grp"),
+        F.col("node").cast("string").alias("value"),
+    )
+    regs = hll_registers(keyed, "grp", "value").localCheckpoint()
+
+    def _est(t: int, r: DataFrame) -> DataFrame:
+        return hll_estimate(r).select("grp", F.lit(t).cast("int").alias("t"), "est")
+
+    balls = _est(0, regs)
+    for t in range(1, rounds + 1):
+        nbr = e.join(regs.withColumnRenamed("grp", "dst"), "dst").select(
+            F.col("src").alias("grp"), "bucket", "rho"
+        )
+        regs = (
+            regs.unionByName(nbr)
+            .groupBy("grp", "bucket")
+            .agg(F.max("rho").alias("rho"))
+            .localCheckpoint()
+        )
+        balls = balls.unionByName(_est(t, regs))
+    return balls
+
+
 def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
@@ -97,40 +215,20 @@ def pagerank(
     integer power-iteration steps. ``nodes`` must carry a ``node``
     column covering every vertex (isolated vertices included — they end
     at ``base``)."""
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("src"),
-        F.col(edges.columns[1]).cast("long").alias("dst"),
-    ).localCheckpoint()
-    out = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    # src side of every iteration: (src, out_deg) — static, checkpoint once
-    src_deg = out.localCheckpoint()
-
     _check_rank_resolution(n_nodes)
     init = PR_SCALE // n_nodes
     base = (init * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
-    # one checkpointed node list reused by every iteration — re-embedding
-    # an uncheckpointed nodes plan T times would regrow the lineage the
-    # loop exists to truncate
-    nodes_l = nodes.select(F.col("node").cast("long").alias("node")).localCheckpoint()
-    ranks = nodes_l.withColumn("rank_ppb", F.lit(init).cast("long"))
-    for _ in range(iterations):
-        contribs = (
-            e.join(src_deg, "src")
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select("dst", F.expr("rank_ppb div out_deg").alias("c"))
-        )
-        in_sums = contribs.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes_l.join(in_sums.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(f"({PR_DAMP_NUM} * coalesce(s, 0L)) div {PR_DAMP_DEN}")
-                ).alias("rank_ppb"),
-            )
-            .localCheckpoint()
-        )
+    e = _edge_list(edges)
+    ranks, src_deg = _propagate(
+        e,
+        nodes.select(
+            F.col("node").cast("long").alias("node"),
+            F.lit(init).cast("long").alias("rank_ppb"),
+        ),
+        "rank_ppb",
+        [(F.lit(base) + F.expr(f"({PR_DAMP_NUM} * s) div {PR_DAMP_DEN}")).alias("rank_ppb")],
+        iterations,
+    )
     in_deg = e.groupBy(F.col("dst").alias("node")).agg(F.count(F.lit(1)).alias("in_deg"))
     return (
         ranks.join(src_deg.withColumnRenamed("src", "node"), "node", "left")
@@ -148,16 +246,9 @@ def pagerank_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: synthesize the arithmetic link graph over the
     documents table and rank it. One bounded driver scalar (the node
     count) — same role as the bloom sizing estimate in the frontier."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
-    if n == 0:  # empty slice: empty result, not a division-by-zero
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(0).cast("long").alias("out_deg"),
-            F.lit(0).cast("long").alias("in_deg"),
-            F.lit(0).cast("long").alias("rank_ppb"),
-        )
-    edges = synth_link_graph(docs, n)
+    n, nodes, edges = _doc_graph(docs)
+    if n == 0:
+        return _empty(docs, "doc_id long, out_deg long, in_deg long, rank_ppb long")
     return pagerank(edges, nodes, n)
 
 
@@ -166,12 +257,12 @@ def host_links_over_documents(docs: DataFrame) -> DataFrame:
     doc→host dim over the documents table, then roll up to the host
     level. One bounded driver scalar (the node count) — the same role
     it plays in pagerank_over_documents."""
-    n = docs.count()
+    _, _, edges = _doc_graph(docs)
     hosts = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.concat("source", F.lit(".example.com")).alias("host"),
     )
-    return host_link_summary(synth_link_graph(docs, n), hosts)
+    return host_link_summary(edges, hosts)
 
 
 HOSTGRAPH_TOPK = 5
@@ -269,10 +360,7 @@ def hits(
     """(doc_id, auth_ppb, hub_ppb) after ``iterations`` exact integer
     mutual-reinforcement steps from a uniform hub start. ``nodes``
     must carry a ``node`` column covering every vertex."""
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("src"),
-        F.col(edges.columns[1]).cast("long").alias("dst"),
-    ).localCheckpoint()
+    e = _edge_list(edges)
     nodes_l = nodes.select(
         F.col("node").cast("long").alias("node")
     ).localCheckpoint()
@@ -307,15 +395,10 @@ def hits(
 def hits_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: the arithmetic link graph over documents, scored
     by HITS. Reuses synth_link_graph (one bounded node-count scalar)."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     if n == 0:
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(0).cast("long").alias("auth_ppb"),
-            F.lit(0).cast("long").alias("hub_ppb"),
-        )
-    return hits(synth_link_graph(docs, n), nodes)
+        return _empty(docs, "doc_id long, auth_ppb long, hub_ppb long")
+    return hits(edges, nodes)
 
 
 TR_SEED_MOD = 17  # driver-query seed rule: doc_id % 17 == 0 is trusted
@@ -347,16 +430,11 @@ def trustrank(
     Scale shape: identical to pagerank — per iteration one src-keyed
     join + one partial-agg groupBy(dst), lineage truncated per step;
     the seed table rides along as a broadcast-sized flag column."""
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("src"),
-        F.col(edges.columns[1]).cast("long").alias("dst"),
-    ).localCheckpoint()
-    src_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")).localCheckpoint()
-
     _check_rank_resolution(n_seeds)
     init = PR_SCALE // n_seeds
     base = (init * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
-    nodes_l = (
+    paid = F.col("is_seed").cast("long")  # 1 for a seed, else 0
+    start = (
         nodes.select(F.col("node").cast("long").alias("node"))
         .join(
             seeds.select(F.col("node").cast("long").alias("node"))
@@ -365,52 +443,30 @@ def trustrank(
             "left",
         )
         .select("node", F.coalesce("_s", F.lit(False)).alias("is_seed"))
-        .localCheckpoint()
+        .withColumn("rank_ppb", paid * init)
     )
-    ranks = nodes_l.select(
-        "node",
-        F.when(F.col("is_seed"), F.lit(init)).otherwise(F.lit(0))
-        .cast("long")
-        .alias("rank_ppb"),
+    ranks, _ = _propagate(
+        _edge_list(edges),
+        start,
+        "rank_ppb",
+        [
+            "is_seed",
+            (paid * base + F.expr(f"({PR_DAMP_NUM} * s) div {PR_DAMP_DEN}")).alias("rank_ppb"),
+        ],
+        iterations,
     )
-    for _ in range(iterations):
-        contribs = (
-            e.join(src_deg, "src")
-            .join(ranks.withColumnRenamed("node", "src"), "src")
-            .select("dst", F.expr("rank_ppb div out_deg").alias("c"))
-        )
-        in_sums = contribs.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes_l.join(in_sums.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
-                    + F.expr(f"({PR_DAMP_NUM} * coalesce(s, 0L)) div {PR_DAMP_DEN}")
-                ).cast("long").alias("rank_ppb"),
-            )
-            .localCheckpoint()
-        )
-    return nodes_l.join(ranks, "node").select(
-        F.col("node").alias("doc_id"), "is_seed", "rank_ppb"
-    )
+    return ranks.select(F.col("node").alias("doc_id"), "is_seed", "rank_ppb")
 
 
 def trustrank_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: arithmetic link graph + the deterministic seed rule
     doc_id % TR_SEED_MOD == 0. Two bounded driver scalars (node and
     seed counts) — same role as pagerank_over_documents' n."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     seeds = nodes.where(F.col("node") % TR_SEED_MOD == 0)
     n_seeds = seeds.count()
     if n == 0 or n_seeds == 0:
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(False).alias("is_seed"),
-            F.lit(0).cast("long").alias("rank_ppb"),
-        )
-    edges = synth_link_graph(docs, n)
+        return _empty(docs, "doc_id long, is_seed boolean, rank_ppb long")
     return trustrank(edges, nodes, seeds, n_seeds)
 
 
@@ -444,37 +500,21 @@ def opic(
     groupBy(dst) + a map-side history add; lineage truncated per step
     with localCheckpoint — identical plan economy to pagerank, one
     extra long column."""
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("src"),
-        F.col(edges.columns[1]).cast("long").alias("dst"),
-    ).localCheckpoint()
-    src_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg")).localCheckpoint()
-    nodes_l = nodes.select(F.col("node").cast("long").alias("node")).localCheckpoint()
-
     _check_rank_resolution(n_nodes)
-    init = PR_SCALE // n_nodes
-    state = nodes_l.select(
-        "node",
-        F.lit(init).cast("long").alias("cash"),
-        F.lit(0).cast("long").alias("history"),
+    state, src_deg = _propagate(
+        _edge_list(edges),
+        nodes.select(
+            F.col("node").cast("long").alias("node"),
+            F.lit(PR_SCALE // n_nodes).cast("long").alias("cash"),
+            F.lit(0).cast("long").alias("history"),
+        ),
+        "cash",
+        [
+            F.col("s").alias("cash"),
+            (F.col("history") + F.col("cash")).cast("long").alias("history"),
+        ],
+        iterations,
     )
-    for _ in range(iterations):
-        received = (
-            e.join(src_deg, "src")
-            .join(state.withColumnRenamed("node", "src").select("src", "cash"), "src")
-            .select("dst", F.expr("cash div out_deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("r"))
-        )
-        state = (
-            state.join(received.withColumnRenamed("dst", "node"), "node", "left")
-            .select(
-                "node",
-                F.coalesce("r", F.lit(0)).cast("long").alias("cash"),
-                (F.col("history") + F.col("cash")).cast("long").alias("history"),
-            )
-            .localCheckpoint()
-        )
     return (
         state.join(src_deg.withColumnRenamed("src", "node"), "node", "left")
         .select(
@@ -490,17 +530,14 @@ def opic(
 def opic_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: OPIC over the arithmetic link graph. One bounded
     driver scalar (node count)."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     if n == 0:
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(0).cast("long").alias("out_deg"),
-            F.lit(0).cast("long").alias("cash_ppb"),
-            F.lit(0).cast("long").alias("history_ppb"),
-            F.lit(0).cast("long").alias("importance_ppb"),
+        return _empty(
+            docs,
+            "doc_id long, out_deg long, cash_ppb long, history_ppb long,"
+            " importance_ppb long",
         )
-    return opic(synth_link_graph(docs, n), nodes, n)
+    return opic(edges, nodes, n)
 
 
 def degree_histogram(edges: DataFrame) -> DataFrame:
@@ -539,23 +576,14 @@ def degree_histogram(edges: DataFrame) -> DataFrame:
 
 def degree_histogram_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: degree histogram of the arithmetic link graph."""
-    n = docs.count()
+    n, _, edges = _doc_graph(docs)
     if n == 0:
-        from pyspark.sql import types as T
-
-        return docs.sparkSession.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("direction", T.StringType()),
-                    T.StructField("log2_bucket", T.IntegerType()),
-                    T.StructField("n_nodes", T.LongType()),
-                    T.StructField("min_deg", T.LongType()),
-                    T.StructField("max_deg", T.LongType()),
-                ]
-            ),
+        return _empty(
+            docs,
+            "direction string, log2_bucket int, n_nodes long, min_deg long,"
+            " max_deg long",
         )
-    return degree_histogram(synth_link_graph(docs, n))
+    return degree_histogram(edges)
 
 
 # Relative spam mass above this per-mille flags the page (essentially
@@ -595,22 +623,19 @@ def spam_mass(pr: DataFrame, tr: DataFrame) -> DataFrame:
 
 def spam_mass_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: PageRank and TrustRank over the same synthetic
-    graph + seed rule, composed into per-page spam mass. The edge list
-    is checkpointed once and shared by both loops."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    graph + seed rule, composed into per-page spam mass. The synthetic
+    graph is derived once (checkpointed here); each loop then casts
+    and checkpoints its own copy and builds its own out-degrees."""
+    n, nodes, edges = _doc_graph(docs)
     seeds = nodes.where(F.col("node") % TR_SEED_MOD == 0)
     n_seeds = seeds.count()
     if n == 0 or n_seeds == 0:
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(0).cast("long").alias("rank_ppb"),
-            F.lit(0).cast("long").alias("trust_ppb"),
-            F.lit(False).alias("is_seed"),
-            F.lit(0).cast("long").alias("spam_mass_pm"),
-            F.lit(False).alias("spam_flag"),
+        return _empty(
+            docs,
+            "doc_id long, rank_ppb long, trust_ppb long, is_seed boolean,"
+            " spam_mass_pm long, spam_flag boolean",
         )
-    edges = synth_link_graph(docs, n).localCheckpoint()
+    edges = edges.localCheckpoint()
     pr = pagerank(edges, nodes, n)
     tr = trustrank(edges, nodes, seeds, n_seeds)
     return spam_mass(pr, tr)
@@ -672,10 +697,7 @@ def bowtie_regions(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     round, lineage truncated, bounded-count probe) over the SAME
     checkpointed edge list, then one label join + a ≤4-row partial agg.
     """
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("src"),
-        F.col(edges.columns[1]).cast("long").alias("dst"),
-    ).localCheckpoint()
+    e = _edge_list(edges)
     nodes_l = nodes.select(F.col("node").cast("long").alias("node"))
     odeg = e.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("_o"))
     ideg = e.groupBy(F.col("dst").alias("node")).agg(F.count(F.lit(1)).alias("_i"))
@@ -709,15 +731,10 @@ def bowtie_regions(edges: DataFrame, nodes: DataFrame) -> DataFrame:
 
 def bowtie_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: bow-tie map of the arithmetic link graph."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     if n == 0:
-        return nodes.select(
-            F.lit("other").alias("region"),
-            F.lit(0).cast("long").alias("n_nodes"),
-            F.col("node").alias("min_node"),
-        )
-    return bowtie_regions(synth_link_graph(docs, n), nodes)
+        return _empty(docs, "region string, n_nodes long, min_node long")
+    return bowtie_regions(edges, nodes)
 
 
 def triangle_counts(edges: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -814,15 +831,9 @@ def triangles_over_documents(docs: DataFrame) -> DataFrame:
     generator alone is nearly triangle-free, so the ring plants ~n
     closed wedges and the census exercises every stage non-trivially
     (the oracle mirrors the union)."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     if n == 0:
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(0).cast("long").alias("deg"),
-            F.lit(0).cast("long").alias("n_tri"),
-            F.lit(0).cast("long").alias("clustering_pm"),
-        )
+        return _empty(docs, "doc_id long, deg long, n_tri long, clustering_pm long")
     ring = nodes.select(
         F.col("node").alias("src"),
         F.explode(
@@ -831,7 +842,7 @@ def triangles_over_documents(docs: DataFrame) -> DataFrame:
             )
         ).alias("dst"),
     ).where(F.col("src") != F.col("dst"))
-    edges = synth_link_graph(docs, n).unionByName(ring).distinct()
+    edges = edges.unionByName(ring).distinct()
     return triangle_counts(edges, nodes).withColumnRenamed("node", "doc_id")
 
 
@@ -850,9 +861,8 @@ def hyperanf(
     function of very large graphs on a budget", WWW 2011, public —
     the method behind the Facebook "four degrees of separation"
     measurement). Exact per-node balls need O(n²) state; HyperANF
-    keeps m registers per node and one round per radius:
-    B_t(v) = B_{t-1}(v) ∪ ⋃_{v→w} B_{t-1}(w), which on register
-    tables is ONE equi-join + ONE max partial-agg per round. The
+    keeps m registers per node and one round per radius
+    (:func:`_hll_balls`), and NF(t) is one groupBy(t) sum. The
     NF curve is the crawl's reach profile — how much of the web a
     t-hop frontier expansion can touch — and the t where it plateaus
     is the effective diameter.
@@ -864,60 +874,28 @@ def hyperanf(
     reuse; production HyperANF runs m = 16–64 per node (the paper's
     "budget") — one constant, same plan.
 
-    Scale shape: register table ≤ n·m rows, lineage truncated per
-    round (localCheckpoint); the join fans out |E|·m rows per round
-    — the documented HyperANF cost — and the max-merge collapses it
-    map-side before the shuffle. pairs_reached_pm = NF(t)·1000 div n²
-    (the fraction of all ordered pairs within distance t)."""
-    from crawler_spark.operators.hll import hll_estimate, hll_registers
-
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("src"),
-        F.col(edges.columns[1]).cast("long").alias("dst"),
-    ).localCheckpoint()
-    keyed = nodes.select(
-        F.col("node").cast("long").alias("grp"),
-        F.col("node").cast("string").alias("value"),
+    Scale shape: see :func:`_hll_balls`; register table ≤ n·m rows.
+    pairs_reached_pm = NF(t)·1000 div n² (the fraction of all ordered
+    pairs within distance t)."""
+    return (
+        _hll_balls(_edge_list(edges), nodes, rounds)
+        .groupBy("t")
+        .agg(F.sum("est").cast("long").alias("nf_est"))
+        .select(
+            "t",
+            "nf_est",
+            F.expr(f"nf_est * 1000 div {n_nodes * n_nodes}").alias("pairs_reached_pm"),
+        )
     )
-    regs = hll_registers(keyed, "grp", "value").localCheckpoint()
-    denom = n_nodes * n_nodes
-
-    def _nf(t: int, r: DataFrame) -> DataFrame:
-        return (
-            hll_estimate(r)
-            .agg(F.sum("est").cast("long").alias("nf_est"))
-            .select(
-                F.lit(t).cast("int").alias("t"),
-                "nf_est",
-                F.expr(f"nf_est * 1000 div {denom}").alias("pairs_reached_pm"),
-            )
-        )
-
-    out = _nf(0, regs)
-    for t in range(1, rounds + 1):
-        nbr = e.join(regs.withColumnRenamed("grp", "dst"), "dst").select(
-            F.col("src").alias("grp"), "bucket", "rho"
-        )
-        regs = (
-            regs.unionByName(nbr)
-            .groupBy("grp", "bucket")
-            .agg(F.max("rho").alias("rho"))
-            .localCheckpoint()
-        )
-        out = out.unionByName(_nf(t, regs))
-    return out
 
 
 def hyperanf_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: neighborhood function of the arithmetic link
     graph. One bounded driver scalar (node count)."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     if n == 0:
-        return docs.sparkSession.createDataFrame(
-            [], "t int, nf_est long, pairs_reached_pm long"
-        )
-    return hyperanf(synth_link_graph(docs, n), nodes, n)
+        return _empty(docs, "t int, nf_est long, pairs_reached_pm long")
+    return hyperanf(edges, nodes, n)
 
 
 # ---------------------------------------------------------------- SALSA --
@@ -1002,10 +980,7 @@ def salsa(edges: DataFrame, nodes: DataFrame) -> DataFrame:
     chain, per the paper)."""
     from crawler_spark.operators.components import connected_components
 
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("src"),
-        F.col(edges.columns[1]).cast("long").alias("dst"),
-    ).localCheckpoint()
+    e = _edge_list(edges)
     # bipartite encoding: hub u → 2u, authority v → 2v+1 (disjoint ids)
     comp = connected_components(
         e.select(
@@ -1041,15 +1016,10 @@ def salsa_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: closed-form SALSA over the arithmetic link graph.
     Driver scalars are bounded: node count + one 2-value total per
     side (the overflow guard)."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     if n == 0:
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(0).cast("long").alias("salsa_auth_ppb"),
-            F.lit(0).cast("long").alias("salsa_hub_ppb"),
-        )
-    return salsa(synth_link_graph(docs, n), nodes)
+        return _empty(docs, "doc_id long, salsa_auth_ppb long, salsa_hub_ppb long")
+    return salsa(edges, nodes)
 
 
 # -------------------------------------------------- harmonic centrality --
@@ -1070,8 +1040,7 @@ def salsa_over_documents(docs: DataFrame) -> DataFrame:
 # as the register set grows. Max value n·1000 — int64-safe at any
 # crawl size.
 #
-# Scale shape: identical to hyperanf (|E|·m fan-out per round,
-# map-side max-merge, lineage truncated per round), plus ONE window
+# Scale shape: the same _hll_balls kernel as hyperanf, plus ONE window
 # partitioned by node (never global) for the per-node delta series —
 # ≤ rounds+1 rows per partition key.
 
@@ -1085,35 +1054,9 @@ def harmonic_centrality(
     per-node HyperANF in-ball deltas weighted 1/t."""
     from pyspark.sql import Window
 
-    from crawler_spark.operators.hll import hll_estimate, hll_registers
-
-    # reversed edges: the loop grows OUT-balls, so reversing makes
-    # regs(v) accumulate the nodes that REACH v
-    e = edges.select(
-        F.col(edges.columns[1]).cast("long").alias("src"),
-        F.col(edges.columns[0]).cast("long").alias("dst"),
-    ).localCheckpoint()
-    keyed = nodes.select(
-        F.col("node").cast("long").alias("grp"),
-        F.col("node").cast("string").alias("value"),
-    )
-    regs = hll_registers(keyed, "grp", "value").localCheckpoint()
-    hist = hll_estimate(regs).select("grp", F.lit(0).cast("int").alias("t"), "est")
-    for t in range(1, rounds + 1):
-        nbr = e.join(regs.withColumnRenamed("grp", "dst"), "dst").select(
-            F.col("src").alias("grp"), "bucket", "rho"
-        )
-        regs = (
-            regs.unionByName(nbr)
-            .groupBy("grp", "bucket")
-            .agg(F.max("rho").alias("rho"))
-            .localCheckpoint()
-        )
-        hist = hist.unionByName(
-            hll_estimate(regs).select(
-                "grp", F.lit(t).cast("int").alias("t"), "est"
-            )
-        )
+    # reversed edges: the kernel grows OUT-balls, so reversing makes
+    # ball(v) accumulate the nodes that REACH v
+    hist = _hll_balls(_edge_list(edges, reverse=True), nodes, rounds)
     w = Window.partitionBy("grp").orderBy("t")
     hc = (
         hist.withColumn("d", F.col("est") - F.lag("est").over(w))
@@ -1138,11 +1081,7 @@ def harmonic_centrality(
 def harmonic_over_documents(docs: DataFrame) -> DataFrame:
     """Driver query: harmonic centrality of the arithmetic link graph.
     One bounded driver scalar (node count)."""
-    n = docs.count()
-    nodes = docs.select(F.col("doc_id").cast("long").alias("node"))
+    n, nodes, edges = _doc_graph(docs)
     if n == 0:
-        return nodes.select(
-            F.col("node").alias("doc_id"),
-            F.lit(0).cast("long").alias("hc_milli"),
-        )
-    return harmonic_centrality(synth_link_graph(docs, n), nodes)
+        return _empty(docs, "doc_id long, hc_milli long")
+    return harmonic_centrality(edges, nodes)

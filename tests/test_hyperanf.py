@@ -49,3 +49,22 @@ def test_hyperanf_pairs_reached_pm(spark):
     # t1: both nodes reach both -> 4 of 4 ordered pairs = 1000pm
     assert rows[1]["pairs_reached_pm"] == 1000
     assert rows[0]["pairs_reached_pm"] == 500
+
+
+def test_hyperanf_matches_twin_on_random_graph(spark):
+    """NF(t) on a seeded random digraph (hubs, dangling and isolated
+    nodes, 2-cycles, duplicate edges) equals the sum over nodes of the
+    portable-HLL estimate of each exact BFS out-ball."""
+    from tests.test_harmonic import _py_hll_est
+    from tests.test_linkgraph import _random_graph
+
+    edges, n = _random_graph(11)
+    succ = {v: set() for v in range(n)}
+    for u, v in edges:
+        succ[u].add(v)
+    balls = [{v} for v in range(n)]
+    want = [sum(_py_hll_est(b) for b in balls)]
+    for _ in range(ANF_ROUNDS):
+        balls = [b | {w for u in b for w in succ[u]} for b in balls]
+        want.append(sum(_py_hll_est(b) for b in balls))
+    assert _anf(spark, edges, list(range(n))) == want

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import random
+
 from crawler_spark.operators.linkgraph import (
     LINK_MAX_DEG,
     LINK_MULT,
@@ -41,6 +43,31 @@ def _py_graph(n):
     return sorted(edges)
 
 
+def _random_graph(seed):
+    """(edges, n): a seeded random digraph on nodes 0..n-1 with the
+    shapes a rank loop must get right — isolated nodes, dangling nodes
+    (in-links, no out-links), high in-degree hubs, 2-cycles and
+    duplicate edges. No self-loops."""
+    rng = random.Random(seed)
+    n = rng.randint(20, 40)
+    isolated = set(rng.sample(range(n), 2))
+    live = [v for v in range(n) if v not in isolated]
+    hubs = rng.sample(live, 2)
+    dangling = set(rng.sample([v for v in live if v not in hubs], 3))
+    senders = [v for v in live if v not in dangling]
+    edges = []
+    for u in senders:
+        for _ in range(rng.randint(1, 4)):
+            v = rng.choice(hubs) if rng.random() < 0.4 else rng.choice(live)
+            if v != u:
+                edges.append((u, v))
+    edges += [(u, d) for u, d in zip(rng.sample(senders, 3), sorted(dangling))]
+    fwd = [(u, v) for u, v in edges if v not in dangling]
+    edges += [(v, u) for u, v in rng.sample(fwd, 2)]  # 2-cycles
+    edges += rng.sample(edges, 3)  # duplicates
+    return edges, n
+
+
 def test_pagerank_matches_python_twin(spark):
     n = 40
     docs = spark.range(n).selectExpr("id AS doc_id")
@@ -61,6 +88,22 @@ def test_pagerank_matches_python_twin(spark):
     for v in range(n):
         assert got[v] == (out_deg.get(v, 0), in_deg.get(v, 0), rank[v])
 
+    for seed in range(5):
+        py_edges, n = _random_graph(seed)
+        edges = spark.createDataFrame(py_edges, "src long, dst long")
+        nodes = spark.range(n).selectExpr("id AS node")
+        got = {
+            r["doc_id"]: (r["out_deg"], r["in_deg"], r["rank_ppb"])
+            for r in pagerank(edges, nodes, n, PR_ITERATIONS).collect()
+        }
+        rank, out_deg = _py_pagerank(py_edges, n, PR_ITERATIONS)
+        in_deg = {}
+        for _, v in py_edges:
+            in_deg[v] = in_deg.get(v, 0) + 1
+        assert got == {
+            v: (out_deg.get(v, 0), in_deg.get(v, 0), rank[v]) for v in range(n)
+        }, seed
+
 
 def test_pagerank_properties(spark):
     # hand graph: hub 0 -> {1,2,3}; chain 1->2->3; 4 isolated
@@ -80,15 +123,53 @@ def test_pagerank_properties(spark):
     assert sum(r["rank_ppb"] for r in res.values()) <= PR_SCALE
 
 
-def test_pagerank_empty_corpus(spark):
-    from crawler_spark.operators.linkgraph import pagerank_over_documents
+# Every graph driver query's result schema on an empty slice.
+_EMPTY_SCHEMAS = {
+    "pagerank_over_documents": "doc_id bigint, out_deg bigint, in_deg bigint, rank_ppb bigint",
+    "host_links_over_documents": "src_host string, dst_host string, n_links bigint, rk bigint",
+    "hits_over_documents": "doc_id bigint, auth_ppb bigint, hub_ppb bigint",
+    "trustrank_over_documents": "doc_id bigint, is_seed boolean, rank_ppb bigint",
+    "opic_over_documents": (
+        "doc_id bigint, out_deg bigint, cash_ppb bigint, history_ppb bigint,"
+        " importance_ppb bigint"
+    ),
+    "degree_histogram_over_documents": (
+        "direction string, log2_bucket int, n_nodes bigint, min_deg bigint, max_deg bigint"
+    ),
+    "spam_mass_over_documents": (
+        "doc_id bigint, rank_ppb bigint, trust_ppb bigint, is_seed boolean,"
+        " spam_mass_pm bigint, spam_flag boolean"
+    ),
+    "bowtie_over_documents": "region string, n_nodes bigint, min_node bigint",
+    "triangles_over_documents": "doc_id bigint, deg bigint, n_tri bigint, clustering_pm bigint",
+    "hyperanf_over_documents": "t int, nf_est bigint, pairs_reached_pm bigint",
+    "salsa_over_documents": "doc_id bigint, salsa_auth_ppb bigint, salsa_hub_ppb bigint",
+    "harmonic_over_documents": "doc_id bigint, hc_milli bigint",
+    "communities_over_documents": "doc_id bigint, community bigint, csize bigint",
+}
 
-    docs = spark.createDataFrame([], "doc_id long, text string")
-    res = pagerank_over_documents(docs)
-    assert res.count() == 0
-    assert [f.name for f in res.schema.fields] == [
-        "doc_id", "out_deg", "in_deg", "rank_ppb",
-    ]
+
+def test_pagerank_empty_corpus(spark):
+    from crawler_spark.operators import linkgraph
+    from crawler_spark.operators.communities import communities_over_documents
+
+    docs = spark.createDataFrame(
+        [], "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    wrappers = {
+        name: getattr(linkgraph, name)
+        for name in dir(linkgraph)
+        if name.endswith("_over_documents")
+    }
+    wrappers["communities_over_documents"] = communities_over_documents
+    assert set(wrappers) == set(_EMPTY_SCHEMAS)
+    for name, fn in wrappers.items():
+        res = fn(docs)
+        assert res.count() == 0, name
+        got = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}" for f in res.schema.fields
+        )
+        assert got == _EMPTY_SCHEMAS[name], name
 
 
 def test_pagerank_plan_shape(spark):

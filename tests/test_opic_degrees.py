@@ -7,6 +7,7 @@ from collections import defaultdict
 import pytest
 
 from crawler_spark.operators.linkgraph import PR_SCALE, degree_histogram, opic
+from tests.test_linkgraph import _random_graph
 
 
 def _py_opic(edges, nodes, iters):
@@ -43,6 +44,17 @@ def test_opic_matches_python_and_banks_history(spark):
     assert all(c + h == i for (c, h, i) in got.values())
     # isolated node: history = its initial cash spent in round 1, no inflow
     assert got[5][0] == 0 and got[5][1] == PR_SCALE // 6
+
+    for seed in range(5):
+        edges, n = _random_graph(seed)
+        e = spark.createDataFrame(edges, "src long, dst long")
+        nd = spark.range(n).selectExpr("id AS node")
+        got = {
+            r["doc_id"]: (r["cash_ppb"], r["history_ppb"], r["importance_ppb"])
+            for r in opic(e, nd, n, iterations=3).collect()
+        }
+        want = _py_opic(edges, list(range(n)), 3)
+        assert got == {v: (c, h, c + h) for v, (c, h) in want.items()}, seed
 
 
 @pytest.mark.spark

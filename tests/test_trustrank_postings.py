@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import random
 from collections import defaultdict
 
 import pytest
@@ -16,6 +17,7 @@ from crawler_spark.operators.linkgraph import (
     trustrank,
 )
 from crawler_spark.operators.termstats import vocab_coverage
+from tests.test_linkgraph import _random_graph
 
 
 def _py_trustrank(edges, nodes, seeds, iters):
@@ -56,6 +58,19 @@ def test_trustrank_matches_python_and_starves_farms(spark):
     assert got[0][0] and got[4][0] and not got[8][0]
     assert want[8] == 0 and want[9] == 0  # farm starved
     assert want[1] > 0 and want[2] > 0  # trust flows down the chain
+
+    for seed in range(5):
+        edges, n = _random_graph(seed)
+        seeds = set(random.Random(seed).sample(range(n), 4))
+        e = spark.createDataFrame(edges, "src long, dst long")
+        nd = spark.range(n).selectExpr("id AS node")
+        sd = spark.createDataFrame([(s,) for s in sorted(seeds)], "node long")
+        got = {
+            r["doc_id"]: (r["is_seed"], r["rank_ppb"])
+            for r in trustrank(e, nd, sd, len(seeds), iterations=4).collect()
+        }
+        want = _py_trustrank(edges, range(n), seeds, 4)
+        assert got == {v: (v in seeds, want[v]) for v in range(n)}, seed
 
 
 def _py_postings_sizes(rows, min_df):
